@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["default_cores", "get_spark", "stop_spark"]
 
 
 def get_spark(
@@ -24,18 +24,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores=None`` uses ``$SPARK_GRAFT_CPUS`` (default 32). Shuffle
-    partitions default to ``max(cores, 8)`` — sized so each of the
-    local executor threads gets work without creating thousands of
-    tiny reducers; at cluster scale callers override this to
-    ~2-3x total cores.
+    ``cores=None`` uses ``default_cores()``: ``$SPARK_GRAFT_CPUS`` if
+    set, else the CPUs this process may run on. Shuffle partitions
+    default to ``max(cores, 8)`` — sized so each of the local executor
+    threads gets work without creating thousands of tiny reducers; at
+    cluster scale callers override this to ~2-3x total cores.
     """
     # keep per-worker numpy/BLAS single-threaded: N python workers each
     # spawning a BLAS pool oversubscribes the box (inherited by workers)
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cores), 8)
 
@@ -61,6 +61,17 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
+        # DataFrame call-site capture off. When on, PySpark 4.1 wraps
+        # every DataFrame/Column/F.* call in extra py4j round trips
+        # (active session, conf read, origin set and reset). Building
+        # the plan of validate_image_table, warm, on a 4-core host: with
+        # it 5,254-7,181 round trips and 0.58-0.82 s, without it
+        # 1,954-2,981 and 0.49-0.51 s. Errors keep their class and
+        # message; only the Python call site in an error's query context
+        # is lost. To get it back, pass extra_conf=
+        # {"spark.python.sql.dataFrameDebugging.enabled": "true"} to the
+        # first session of the process (PySpark reads it once).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("OBLATE_SPARK_DRIVER_MEM", "12g"))
@@ -83,6 +94,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def stop_spark() -> None:

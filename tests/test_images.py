@@ -156,20 +156,26 @@ def test_file_driven_kernel_hadoop_listing(spark, images_df, tmp_path):
     """image_payload_report_from_files lists via the Hadoop FileSystem
     API (object-store-safe, not local glob): multi-directory input and
     scheme-qualified file: URIs both resolve, and the report matches the
-    DataFrame-driven kernel on the same rows."""
+    DataFrame-driven kernel on the same rows. With more files than
+    cores the files are packed into one bin per core, read by one
+    Python task each, from a JVM source (no Python RDD scan)."""
     from pyspark.sql import functions as F
 
     from oblate_spark.operators.images import (
+        _list_parquet_files,
         image_payload_report,
         image_payload_report_from_files,
     )
 
+    cores = spark.sparkContext.defaultParallelism
     d1, d2 = str(tmp_path / "part1"), str(tmp_path / "part2")
     par = F.substring("image_id", -1, 1).cast("int") % 2
     a = images_df.filter(par == 0)
     b = images_df.filter(par == 1)
-    a.write.mode("overwrite").parquet(d1)
-    b.write.mode("overwrite").parquet(d2)
+    a.repartition(cores + 1).write.mode("overwrite").parquet(d1)
+    b.repartition(cores).write.mode("overwrite").parquet(d2)
+    n_files = len(_list_parquet_files(spark, [d1, d2]))
+    assert n_files > cores  # bins hold several files
 
     # multi-directory list input, scheme-qualified on one of them
     rep = image_payload_report_from_files(spark, [f"file:{d1}", d2])
@@ -181,9 +187,41 @@ def test_file_driven_kernel_hadoop_listing(spark, images_df, tmp_path):
         for r in df.collect()
     )
     assert key(rep) == key(base)
+    assert rep.rdd.getNumPartitions() == min(n_files, cores)
+    plan = rep._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
 
     with pytest.raises(ValueError, match="no parquet files"):
         image_payload_report_from_files(spark, str(tmp_path / "empty_nowhere"))
+
+
+def test_pack_files_lpt():
+    """The file packer places every file exactly once, keeps every bin
+    non-empty, stays within the LPT bound of the best packing (brute
+    force on small inputs), and depends only on the input set."""
+    import itertools
+    import random
+
+    from oblate_spark.operators.images import _pack_files
+
+    rng = random.Random(11)
+    for trial in range(40):
+        n_files = rng.randint(1, 8)
+        n_bins = rng.randint(1, min(n_files, 3))  # brute force: <= 3**8 packings
+        sizes = {f"file:/t/{trial}/{i}.parquet": rng.choice([1, 7, 50, 50, 300, 1000])
+                 for i in range(n_files)}
+        files = list(sizes.items())
+        bins = _pack_files(files, n_bins)
+        assert len(bins) == n_bins and all(bins)
+        assert sorted(u for bn in bins for u in bn) == sorted(sizes)
+        best = min(
+            max(sum(s for (_u, s), j in zip(files, assign) if j == b) for b in range(n_bins))
+            for assign in itertools.product(range(n_bins), repeat=n_files)
+        )
+        largest = max(sum(sizes[u] for u in bn) for bn in bins)
+        assert largest <= (4 / 3 - 1 / (3 * n_bins)) * best
+        rng.shuffle(files)
+        assert _pack_files(files, n_bins) == bins
 
 
 def test_file_driven_kernel_max_files_subset(spark, images_df, tmp_path):
