@@ -535,7 +535,9 @@ def q_embedding_near_dup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-digest sketch quantiles, oracle-gated by tolerance booleans: the
+    """Sketched quantiles (``drift.approx_quantiles``, Spark's
+    ``percentile_approx``; the query keeps its historical t-digest
+    name), oracle-gated by tolerance booleans: the
     sketch's estimate must sit within 0.5% of the column's value range of
     the EXACT quantile (computed by Spark's sort-based ``percentile``).
     The tolerance comparison runs entirely Spark-side; the DuckDB oracle
@@ -543,11 +545,11 @@ def q_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden-expected gate, not an independent recomputation (DuckDB never
     sees the sketch values, so it cannot derive the booleans itself). A
     drifting sketch flips a boolean and breaks the hash match."""
-    from oblate_spark.operators.drift import tdigest_quantiles
+    from oblate_spark.operators.drift import approx_quantiles
 
     li = _read(spark, sf_dir, "lineitem")
     probs = (0.25, 0.5, 0.75)
-    qs = tdigest_quantiles(li, "l_extendedprice", probs)
+    qs = approx_quantiles(li, "l_extendedprice", probs)
     row = li.select(
         F.expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75))").alias("exact"),
         F.min("l_extendedprice").alias("lo"),
@@ -692,7 +694,7 @@ def q_approx_distinct_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ sketch gate (the 100 TB profiling path): per column,
     approx_count_distinct must land within max(20% of exact, 2) of the
     exact single-distinct count. Oracle emits the exact counts + TRUE —
-    the same tolerance-boolean pattern as the t-digest gates."""
+    the same tolerance-boolean pattern as the quantile-sketch gates."""
     from oblate_spark.operators.stats import column_profile
 
     cols = ["l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"]
@@ -1033,19 +1035,17 @@ def q_tfidf_top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_grouped_tdigest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-KEY t-digest quantiles (salted two-phase — the aggregate
-    where explicit salting genuinely rescues skew, since an
-    applyInPandas sketch has no map-side combine), oracle-gated by
+    """Per-KEY sketched quantiles (``drift.grouped_approx_quantiles``:
+    ``percentile_approx`` per group, combined map-side; the query keeps
+    its historical t-digest name), oracle-gated by
     tolerance booleans per (event_type, quantile): the sketch estimate
     must sit within 1% of the group's value range of the exact per-group
     percentile. Same golden-expected gate as tdigest_quantiles."""
-    from oblate_spark.operators.drift import grouped_tdigest_quantiles
+    from oblate_spark.operators.drift import grouped_approx_quantiles
 
     ev = _read(spark, sf_dir, "events")
     probs = (0.25, 0.5, 0.75)
-    sk = grouped_tdigest_quantiles(
-        ev, "event_type", "value", probs, salt_buckets=8
-    )
+    sk = grouped_approx_quantiles(ev, "event_type", "value", probs)
     exact = ev.groupBy(F.col("event_type").cast("string").alias("key")).agg(
         F.expr("percentile(value, array(0.25, 0.5, 0.75))").alias("exact"),
         F.min("value").alias("lo"),
@@ -1994,9 +1994,8 @@ def q_duplicate_phash_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north rule's phash uniqueness check on the closed-form image
     table: the hot clique's members split into exactly 3 shared phash
     values (HOT xor bit i%3 over multiples of 101), plus any XOR-pair
-    whose two flipped bits cancel. COUNT is algebraic, so the default
-    unsalted groupBy is the right plan (map-side combine bounds the hot
-    key) — the salted two-phase stays for non-combinable aggregates."""
+    whose two flipped bits cancel. COUNT is algebraic, so a plain
+    groupBy is the right plan: map-side combine bounds the hot key."""
     from oblate_spark.fixtures import build_phash_df
     from oblate_spark.operators.stats import duplicate_keys
 
@@ -2655,7 +2654,7 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT 'psi', ({_sql_psi_ks(PSI_BINS, "psi")})
         """,
-        # t-digest tolerance gate: the Spark side emits within_bounds =
+        # quantile-sketch tolerance gate: the Spark side emits within_bounds =
         # |sketch_q - exact_q| <= 0.005*(max-min) against Spark's exact
         # sort-based percentile; a correct sketch therefore matches these
         # literal-true rows, and a drifting one hash-mismatches.
@@ -2775,7 +2774,7 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN us USING (doc_id) LEFT JOIN bs USING (doc_id)
         """,
         # tolerance-boolean gate for the HLL sketch (same pattern as the
-        # t-digest oracles): the oracle pins the exact counts and TRUE
+        # quantile-sketch oracles): the oracle pins the exact counts and TRUE
         "approx_distinct_lineitem": """
             SELECT 'l_orderkey' AS col_name,
                    count(DISTINCT l_orderkey)::BIGINT AS exact_distinct,

@@ -8,7 +8,7 @@
 The north-star metric (BASELINE.json) is end-to-end constraint-eval
 throughput over the image+caption table: full validation = row-level
 schema checks + Arrow payload kernel (decode + dims/fmt + phash
-recompute) + salted uniqueness on image_id and phash.
+recompute) + uniqueness on image_id and phash.
 
 Two-cluster-size criterion (north rule: >=0.8 efficiency from N to 4N
 executors). Evidenced as the SAME job on the SAME parquet at two N->4N
@@ -60,8 +60,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_IMAGES (default 480000),
 SPARK_GRAFT_BENCH_RUNS (default 2 timed samples per point per round),
 SPARK_GRAFT_BENCH_SWEEPS (default 3 interleaved rounds),
-OBLATE_BENCH_SKIP_SCALING=1 to skip the subprocess runs,
-OBLATE_BENCH_SKIP_SKEW=1 to skip the skew/salting demonstration.
+OBLATE_BENCH_SKIP_SCALING=1 to skip the subprocess runs.
 """
 
 from __future__ import annotations
@@ -196,71 +195,6 @@ print(json.dumps({{"cores": {cores}, "secs": out, "violations": n}}))
         if line.startswith("{"):
             return json.loads(line)["secs"]
     raise RuntimeError(f"scaling run failed at cores={cores}: {proc.stderr[-2000:]}")
-
-
-def skew_demo_at(cores: int) -> dict:
-    """SURVEY §7.2 step 8, recorded: salting on/off on hot-key frames at
-    one core count (fresh JVM). Two aggregates, because the honest story
-    has two halves (stats.duplicate_keys docstring):
-
-    * COUNT over a 1M-key frame with a 30% hot key — algebraic, so
-      map-side partial aggregation already bounds the hot key's shuffle
-      to one partial row per mapper: salting is expected to NOT help
-      (it adds a shuffle). This is the evidence for the unsalted
-      default.
-    * per-key t-digest (applyInPandas sketch, 51-key frame with the
-      same 30% hot key) — NO map-side combine exists, the hot key
-      funnels 30% of rows into one Arrow worker: the salted two-phase
-      is expected to rescue the straggler.
-
-    Returns min-of-2 seconds per (aggregate, salt) cell."""
-    code = f"""
-import json, sys, time
-sys.path.insert(0, {os.path.dirname(os.path.abspath(__file__))!r})
-from oblate_spark.session import get_spark
-from pyspark.sql import functions as F
-from oblate_spark.operators.stats import duplicate_keys
-from oblate_spark.operators.drift import grouped_tdigest_quantiles
-spark = get_spark(cores={cores}, app_name="skew_demo_{cores}",
-                  shuffle_partitions=max({cores}, 8))
-N = 8_000_000
-hot = F.pmod(F.col("id"), F.lit(10)) < 3  # 30 percent hot key
-wide = spark.range(N).select(
-    F.col("id").alias("row_id"),
-    F.when(hot, F.lit(0)).otherwise(F.pmod(F.hash(F.col("id")), F.lit(1_000_000))).alias("phash"))
-wide = wide.persist(); wide.count()
-narrow = spark.range(N).select(
-    F.when(hot, F.lit(0)).otherwise(F.pmod(F.hash(F.col("id")), F.lit(50)) + 1).alias("phash"),
-    (F.rand(7) * 100).alias("val"))
-narrow = narrow.persist(); narrow.count()
-def best_of(fn, runs=2, warm=1):
-    for _ in range(warm):
-        fn()
-    out = None
-    for _ in range(runs):
-        t0 = time.time(); fn(); dt = time.time() - t0
-        out = dt if out is None or dt < out else out
-    return round(out, 3)
-jobs = {{
-    "count_unsalted": lambda: duplicate_keys(wide, "phash")
-        .select(F.sum("dup_count")).collect(),
-    "count_salted": lambda: duplicate_keys(wide, "phash", salt_buckets=32)
-        .select(F.sum("dup_count")).collect(),
-    "tdigest_unsalted": lambda: grouped_tdigest_quantiles(
-        narrow, "phash", "val", (0.5,)).collect(),
-    "tdigest_salted": lambda: grouped_tdigest_quantiles(
-        narrow, "phash", "val", (0.5,), salt_buckets=32).collect(),
-}}
-print(json.dumps({{"cores": {cores},
-                  **{{k: best_of(v) for k, v in jobs.items()}}}}))
-"""
-    proc = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=900
-    )
-    for line in reversed(proc.stdout.strip().splitlines()):
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"skew demo failed at cores={cores}: {proc.stderr[-2000:]}")
 
 
 def _pairing_stats(lo: int, hi: int, secs: dict, ctl: dict) -> dict:
@@ -470,35 +404,6 @@ def main() -> None:
         }
         result["engine_relative_efficiency"] = head["engine_relative"]
 
-        demo_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH", "skew_demo.json"
-        )
-        # the demonstration is a recorded one-time artifact: re-measure
-        # only when absent (or forced) — BASELINE.md renders it from the
-        # file either way, and skipping saves ~4 min per invocation
-        want_skew = os.environ.get("OBLATE_BENCH_SKIP_SKEW") != "1" and (
-            not os.path.exists(demo_path)
-            or os.environ.get("OBLATE_BENCH_FORCE_SKEW") == "1"
-        )
-        if want_skew:
-            demo = {
-                "rows": 8_000_000,
-                "hot_fraction": 0.3,
-                "note": (
-                    "salting on/off on a 30%-hot-key frame: COUNT is "
-                    "algebraic (map-side combine bounds the hot key) so "
-                    "salting should NOT help there — evidence for the "
-                    "unsalted default; the applyInPandas t-digest has no "
-                    "map-side combine so the salted two-phase rescues the "
-                    "hot-key straggler"
-                ),
-                "cores": {str(c): skew_demo_at(c) for c in (8, CPUS)},
-            }
-            result["skew_demo"] = demo
-            os.makedirs(os.path.dirname(demo_path), exist_ok=True)
-            with open(demo_path, "w") as f:  # survives best-run selection
-                json.dump(demo, f, indent=1)
-
         # reference single-node comparison (izxxr/oblate is a pure-python
         # row-at-a-time library; this measures it on the same rows)
         try:
@@ -650,9 +555,8 @@ def _write_baseline_md(result: dict) -> None:
         best = result
         with open(best_path, "w") as f:
             json.dump(result, f, indent=1)
-    current_skew = result.get("skew_demo")  # keep even when an older
     current_cum = result.get("scaling", {}).get("efficiency_cumulative")
-    result = best                           # best run (without one) is kept
+    result = best
     sc = result.get("scaling", {})
     pairings = sc.get("pairings", {})
     pooled_engine: dict[int, float] = {}
@@ -777,38 +681,6 @@ def _write_baseline_md(result: dict) -> None:
         "consistency + phash recompute) + uniqueness on image_id and",
         "phash, single bytes scan, report materialized then branched.",
     ]
-    skew = result.get("skew_demo") or current_skew
-    if skew is None:  # fall back to the last recorded demonstration
-        demo_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH", "skew_demo.json"
-        )
-        if os.path.exists(demo_path):
-            try:
-                with open(demo_path) as f:
-                    skew = json.load(f)
-            except (ValueError, OSError):
-                skew = None
-    if skew:
-        cores_keys = sorted(skew.get("cores", {}), key=int)
-        lines += [
-            "",
-            "## Skew / salting demonstration (SURVEY §7.2 step 8)",
-            "",
-            f"{skew['rows']:,} rows, one key holding {int(skew['hot_fraction'] * 100)}%",
-            "of them; min-of-2 seconds, fresh JVM per core count. COUNT is",
-            "algebraic — map-side partial aggregation already bounds the hot",
-            "key, so salting ADDS a shuffle and is expected not to help",
-            "(this is why the engine's count-based uniqueness defaults to",
-            "unsalted). The applyInPandas t-digest has NO map-side combine —",
-            "unsalted, 30% of all rows funnel through one Arrow worker — so",
-            "the salted two-phase rescues the straggler:",
-            "",
-            "| aggregate | " + " | ".join(f"local[{c}]" for c in cores_keys) + " |",
-            "|---|" + "---|" * len(cores_keys),
-        ]
-        for agg in ("count_unsalted", "count_salted", "tdigest_unsalted", "tdigest_salted"):
-            row = " | ".join(str(skew["cores"][c].get(agg)) for c in cores_keys)
-            lines.append(f"| {agg} | {row} |")
     # mins for the KEPT run's sf (the table must never mix scales)
     query_mins = all_query_mins.get(str(result.get("sf")), {}).get("queries", {})
     lines += [

@@ -1,10 +1,10 @@
-"""Distribution-drift checks: histograms, PSI, KS, t-digest quantiles.
+"""Distribution-drift checks: histograms, PSI, KS, sketched quantiles.
 
 Axis B of the north rule: the reference's Length/Literal checks lifted
 to distribution level (SURVEY.md §2.7). scipy/datasketches are absent
 in the sandbox, so the PSI and KS formulas are implemented directly
-(they are ~20 LoC each) and the quantile sketch is a from-scratch
-merging t-digest in numpy.
+(they are ~20 LoC each); quantiles come from Spark's own
+``percentile_approx`` sketch.
 
 Scale notes:
 
@@ -14,15 +14,16 @@ Scale notes:
 * ``psi`` / ``ks_statistic`` — computed on the *binned* frames
   (≤ nbins rows each): driver-side math on sketch output, never on raw
   data.
-* ``tdigest_quantiles`` — one ``applyInPandas``-style partial sketch
-  per partition, merged on the driver: O(partitions × centroids)
-  driver work, constant executor memory.
+* ``approx_quantiles`` / ``grouped_approx_quantiles`` — one
+  ``percentile_approx`` aggregate (globally, or per key): partial
+  sketches combine map-side in the JVM, so sketch memory is set by
+  ``ACCURACY``, not by rows, and a hot key needs no salting.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Optional, Sequence
+from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -34,8 +35,9 @@ __all__ = [
     "drift_statistics",
     "drift_statistics_flagged",
     "drift_report",
-    "tdigest_quantiles",
-    "grouped_tdigest_quantiles",
+    "ACCURACY",
+    "approx_quantiles",
+    "grouped_approx_quantiles",
     "volume_anomalies",
     "benford_first_digit",
     "category_diff",
@@ -231,206 +233,58 @@ def drift_report(
 
 
 # ---------------------------------------------------------------------------
-# t-digest (from scratch, numpy): partial sketch per partition -> merge
+# quantiles: Spark's percentile_approx sketch (a JVM partial aggregate)
 # ---------------------------------------------------------------------------
 
-
-class TDigest:
-    """Minimal merging t-digest (Dunning's k1 scale function idea
-    simplified to quantile-uniform compression buckets). Accurate at the
-    tails where uniform histograms are not; constant memory
-    (≤ compression centroids)."""
-
-    def __init__(self, compression: int = 100) -> None:
-        self.compression = compression
-        self.means = np.empty(0, dtype=np.float64)
-        self.weights = np.empty(0, dtype=np.float64)
-
-    def add(self, values: np.ndarray) -> None:
-        if len(values) == 0:
-            return
-        self.means = np.concatenate([self.means, values.astype(np.float64)])
-        self.weights = np.concatenate([self.weights, np.ones(len(values))])
-        if len(self.means) > 8 * self.compression:
-            self._compress()
-
-    def merge(self, other: "TDigest") -> None:
-        self.means = np.concatenate([self.means, other.means])
-        self.weights = np.concatenate([self.weights, other.weights])
-        self._compress()
-
-    def _compress(self) -> None:
-        if len(self.means) <= self.compression:
-            return
-        order = np.argsort(self.means)
-        means, weights = self.means[order], self.weights[order]
-        total = weights.sum()
-        # target: centroids sized by the k1 scale function — smaller near
-        # the tails (q(1-q) weighting), larger in the middle
-        cum = np.cumsum(weights) - weights / 2.0
-        q = cum / total
-        k = (self.compression / (2 * math.pi)) * np.arcsin(2 * q - 1)
-        bucket = np.floor(k - k[0]).astype(np.int64)
-        new_means, new_weights = [], []
-        for b in np.unique(bucket):
-            mask = bucket == b
-            w = weights[mask].sum()
-            new_means.append(float(np.average(means[mask], weights=weights[mask])))
-            new_weights.append(float(w))
-        self.means = np.asarray(new_means)
-        self.weights = np.asarray(new_weights)
-
-    def quantile(self, q: float) -> float:
-        self._compress()
-        if len(self.means) == 0:
-            return float("nan")
-        order = np.argsort(self.means)
-        means, weights = self.means[order], self.weights[order]
-        cum = np.cumsum(weights) - weights / 2.0
-        target = q * weights.sum()
-        return float(np.interp(target, cum, means))
-
-    def to_rows(self) -> list:
-        return [(float(m), float(w)) for m, w in zip(self.means, self.weights)]
-
-    @classmethod
-    def from_rows(cls, rows, compression: int = 100) -> "TDigest":
-        d = cls(compression)
-        if rows:
-            d.means = np.array([r[0] for r in rows], dtype=np.float64)
-            d.weights = np.array([r[1] for r in rows], dtype=np.float64)
-        return d
+# percentile_approx's accuracy for every sketched quantile in the engine
+# (drift here, stats.iqr/mad_outlier_profile): rank error <= n / ACCURACY,
+# and below ACCURACY values the sketch returns the exact order statistic.
+ACCURACY = 10_000
 
 
-def tdigest_quantiles(
+def approx_quantiles(
     df: DataFrame,
     col: str,
     quantiles: Sequence[float] = (0.01, 0.25, 0.5, 0.75, 0.99),
-    *,
-    compression: int = 100,
 ) -> dict[float, float]:
-    """Distributed quantiles via per-partition t-digest partials merged
-    on the driver. Each executor sees only its partition's values inside
-    an Arrow batch; the driver merges ≤ partitions × compression
-    centroids."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf  # noqa: F401
-
-    comp = compression
-
-    def partial(iterator):
-        for pdf in iterator:
-            d = TDigest(comp)
-            vals = pdf[col].dropna().to_numpy(dtype=np.float64)
-            d.add(vals)
-            d._compress()
-            rows = d.to_rows()
-            yield pd.DataFrame({"mean": [m for m, _ in rows], "weight": [w for _, w in rows]})
-
-    partials = df.select(col).mapInPandas(partial, "mean double, weight double").collect()
-    merged = TDigest.from_rows([(r["mean"], r["weight"]) for r in partials], comp)
-    merged._compress()
-    return {q: merged.quantile(q) for q in quantiles}
+    """Quantiles of ``col`` from one ``percentile_approx`` aggregate:
+    each executor builds a partial sketch map-side, one row of merged
+    quantiles reaches the driver. An estimate is the order statistic at
+    rank ceil(q·n), within n / ACCURACY ranks. NULL and NaN are ignored;
+    an empty or all-NULL column gives NaN per quantile."""
+    probs = [float(q) for q in quantiles]
+    row = df.agg(
+        F.percentile_approx(F.col(col).cast("double"), probs, ACCURACY)
+    ).first()  # bounded collect: one row of len(probs) doubles
+    values = row[0] or [float("nan")] * len(probs)
+    return dict(zip(quantiles, values))
 
 
-def grouped_tdigest_quantiles(
+def grouped_approx_quantiles(
     df: DataFrame,
     key_col: str,
     value_col: str,
     quantiles: Sequence[float] = (0.25, 0.5, 0.75),
-    *,
-    compression: int = 100,
-    salt_buckets: Optional[int] = None,
 ) -> DataFrame:
-    """Per-KEY quantiles via t-digest sketches:
-    (key string, quantile double, value double) rows.
-
-    This is the aggregate where explicit salting genuinely rescues skew
-    (unlike count — see stats.duplicate_keys: algebraic aggregates get
-    map-side partial aggregation for free). A custom sketch built in an
-    ``applyInPandas`` group has NO map-side combine: unsalted, every row
-    of a key converges on ONE Arrow python worker, so a hot key (30% of
-    a 10^12-row table) is a straggler task holding 30% of the data.
-
-    ``salt_buckets=B`` runs the classic two-phase shape instead:
-    phase 1 digests per (key, salt) — the hot key's rows spread over B
-    workers, each emitting <= ``compression`` centroids; phase 2 merges
-    <= B x compression centroid rows per key (t-digests merge into a
-    valid digest) and reads the quantiles off the merged sketch. Phase-2
-    input is sketch-sized, not data-sized, so no task ever holds a
-    data-proportional share of a hot key.
-
-    The salt is the physical partition id (deterministic per scan
-    layout, value-independent — a constant-valued hot key still
-    spreads). Sketch results depend on centroid merge order either way,
-    so salted vs unsalted agree to sketch tolerance, not bit-exactly.
-    """
-    import pandas as pd
-
-    comp = compression
+    """Per-KEY quantiles from ``groupBy(key).agg(percentile_approx)``:
+    (key string, quantile double, value double) rows, same estimate and
+    NULL/NaN rules as ``approx_quantiles``. The sketch combines
+    map-side, so a hot key sends one partial sketch per mapper through
+    the shuffle, not its rows. A group with no non-NULL value is
+    absent."""
     probs = [float(q) for q in quantiles]
-    out_schema = "key string, quantile double, value double"
-
-    def digest_rows(values: np.ndarray) -> "pd.DataFrame":
-        d = TDigest(comp)
-        d.add(values)
-        d._compress()
-        rows = d.to_rows()
-        return rows
-
-    base = df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("val"),
-    ).where(F.col("val").isNotNull())
-
-    if not salt_buckets:
-
-        def one_phase(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            key = pdf["key"].iloc[0]
-            d = TDigest(comp)
-            d.add(pdf["val"].to_numpy(dtype=np.float64))
-            return pd.DataFrame(
-                {
-                    "key": [key] * len(probs),
-                    "quantile": probs,
-                    "value": [d.quantile(q) for q in probs],
-                }
-            )
-
-        return base.groupBy("key").applyInPandas(one_phase, out_schema)
-
-    salt = F.pmod(F.spark_partition_id(), F.lit(int(salt_buckets)))
-
-    def partial(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        rows = digest_rows(pdf["val"].to_numpy(dtype=np.float64))
-        return pd.DataFrame(
-            {
-                "key": [pdf["key"].iloc[0]] * len(rows),
-                "mean": [m for m, _ in rows],
-                "weight": [w for _, w in rows],
-            }
-        )
-
-    partials = (
-        base.withColumn("salt", salt)
-        .groupBy("key", "salt")
-        .applyInPandas(partial, "key string, mean double, weight double")
+    sketch = df.groupBy(F.col(key_col).cast("string").alias("key")).agg(
+        F.percentile_approx(F.col(value_col).cast("double"), probs, ACCURACY).alias("v")
     )
-
-    def merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        d = TDigest.from_rows(
-            list(zip(pdf["mean"].to_numpy(), pdf["weight"].to_numpy())), comp
-        )
-        d._compress()
-        return pd.DataFrame(
-            {
-                "key": [pdf["key"].iloc[0]] * len(probs),
-                "quantile": probs,
-                "value": [d.quantile(q) for q in probs],
-            }
-        )
-
-    return partials.groupBy("key").applyInPandas(merge, out_schema)
+    return sketch.select(
+        "key",
+        F.inline(
+            F.arrays_zip(
+                F.array(*[F.lit(q) for q in probs]).alias("quantile"),
+                F.col("v").alias("value"),
+            )
+        ),
+    )
 
 
 def categorical_histogram(df: DataFrame, col: str) -> DataFrame:

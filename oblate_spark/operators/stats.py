@@ -11,9 +11,8 @@ Scale notes (designed for ~100 TB / 1000 executors, tested at sf0.1):
   approx_count_distinct = HyperLogLog++ (constant memory per column).
 * ``duplicate_keys`` — one count-aggregation; map-side partial agg makes
   it skew-safe (a hot key, e.g. the phash shared by 5% of rows in
-  FIXTURES.md F1, contributes one partial row per mapper). Optional
-  two-phase salting for non-combinable variants; AQE skew-split covers
-  the join-back.
+  FIXTURES.md F1, contributes one partial row per mapper). AQE
+  skew-split covers the join-back.
 * ``referential_violations`` — LEFT ANTI join against the *distinct
   projection* of the parent key (column pruning: only the key column is
   scanned on the parent). ``broadcast=True`` forces a broadcast of the
@@ -25,6 +24,8 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
+
+from .drift import ACCURACY
 
 __all__ = [
     "column_profile",
@@ -111,42 +112,19 @@ def column_profile(
     )
 
 
-def duplicate_keys(
-    df: DataFrame,
-    key_cols: Sequence[str] | str,
-    *,
-    salt_buckets: Optional[int] = None,
-) -> DataFrame:
+def duplicate_keys(df: DataFrame, key_cols: Sequence[str] | str) -> DataFrame:
     """Keys appearing more than once: (key..., dup_count).
 
     Skew analysis: COUNT is algebraic, so Spark's map-side partial
     aggregation already bounds a hot key's shuffle volume to one partial
-    row per mapper — a plain groupBy is skew-safe here and one stage
-    cheaper than an explicit two-phase salt. ``salt_buckets`` remains
-    for the general pattern (SURVEY.md §2.7): set it when replacing the
-    count with a NON-combinable aggregate (collect_list/set, exact
-    distinct structs), where a hot key would otherwise funnel all its
-    rows into one reducer; phase 1 then groups on (key, salt) with a
-    deterministic partition-derived salt and phase 2 merges partials.
+    row per mapper — a plain groupBy is skew-safe and one stage cheaper
+    than a two-phase salted count.
     """
     if isinstance(key_cols, str):
         key_cols = [key_cols]
-    if not salt_buckets:
-        return (
-            df.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("dup_count"))
-            .filter(F.col("dup_count") > 1)
-        )
-    keys = [F.col(c) for c in key_cols]
-    salt = F.pmod(F.spark_partition_id(), F.lit(salt_buckets)).alias("__salt")
-    partial = (
-        df.select(*keys, salt)
-        .groupBy(*key_cols, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
     return (
-        partial.groupBy(*key_cols)
-        .agg(F.sum("__partial").alias("dup_count"))
+        df.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("dup_count"))
         .filter(F.col("dup_count") > 1)
     )
 
@@ -156,7 +134,6 @@ def uniqueness_violations(
     key_cols: Sequence[str] | str,
     *,
     row_id: str,
-    salt_buckets: Optional[int] = None,
 ) -> DataFrame:
     """Row-lineage form: every row whose key is duplicated, as violation
     rows (row_id, field_key, error_code, message, dup_count).
@@ -166,7 +143,7 @@ def uniqueness_violations(
     """
     if isinstance(key_cols, str):
         key_cols = [key_cols]
-    dups = duplicate_keys(df, key_cols, salt_buckets=salt_buckets)
+    dups = duplicate_keys(df, key_cols)
     field_key = ",".join(key_cols)
     return (
         df.join(dups, on=list(key_cols), how="inner")
@@ -951,7 +928,6 @@ def iqr_outlier_profile(
     *,
     k: float = 1.5,
     exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Tukey-fence outlier profile per numeric column: (column, q1, q3,
     lo_fence, hi_fence, n_below, n_above) with fences at q1 - k*IQR /
@@ -968,7 +944,7 @@ def iqr_outlier_profile(
     implementation buffers per-partition value->count maps, so its
     memory is O(distinct values), not O(rows)). At web scale over
     high-cardinality doubles pass ``exact=False`` for the mergeable
-    constant-memory ``percentile_approx`` sketch instead.
+    ``percentile_approx`` sketch at ``drift.ACCURACY`` instead.
 
     Exactness contract (how the DuckDB oracle matches bit-for-bit):
     feed integer-valued columns (e.g. prices scaled to cents) and keep
@@ -987,7 +963,7 @@ def iqr_outlier_profile(
         df = df.select(*[F.col(c) for c in cols]).localCheckpoint(eager=True)
         qagg = [F.percentile(F.col(c), p).alias(c) for c in cols]
     else:
-        qagg = [F.percentile_approx(F.col(c), p, accuracy).alias(c) for c in cols]
+        qagg = [F.percentile_approx(F.col(c), p, ACCURACY).alias(c) for c in cols]
     qrow = df.agg(*qagg).first()  # bounded collect: 2 scalars per column
 
     aggs = []
@@ -1040,7 +1016,6 @@ def mad_outlier_profile(
     *,
     k: float = 5.0,
     exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Median/MAD robust outlier profile per numeric column: (column,
     median, mad, lo_fence, hi_fence, n_below, n_above) with fences at
@@ -1053,7 +1028,8 @@ def mad_outlier_profile(
     (medians → MADs over |x - median| with literal medians → fence
     counts with literal fences); driver traffic is 2 scalars per column
     per pass. ``exact=False`` swaps both percentiles for the mergeable
-    ``percentile_approx`` sketch for web-scale high-cardinality inputs.
+    ``percentile_approx`` sketch (at ``drift.ACCURACY``) for web-scale
+    high-cardinality inputs.
 
     Exactness contract: integer-valued inputs make the median a
     multiple of 0.5, |x - median| a multiple of 0.5, the MAD a multiple
@@ -1063,7 +1039,7 @@ def mad_outlier_profile(
     def _median(col):
         if exact:
             return F.percentile(col, 0.5)
-        return F.percentile_approx(col, 0.5, accuracy)
+        return F.percentile_approx(col, 0.5, ACCURACY)
 
     if exact:
         # three serial whole-table passes (median -> MAD -> fences);

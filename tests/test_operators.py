@@ -33,11 +33,10 @@ def test_column_profile(spark):
     assert prof["k"]["row_count"] == 4
 
 
-def test_duplicate_keys_and_salted_variant(spark):
+def test_duplicate_keys(spark):
     df = spark.createDataFrame([(1,), (2,), (2,), (3,), (3,), (3,)], "k long")
-    plain = {r["k"]: r["dup_count"] for r in stats.duplicate_keys(df, "k").collect()}
-    salted = {r["k"]: r["dup_count"] for r in stats.duplicate_keys(df, "k", salt_buckets=4).collect()}
-    assert plain == salted == {2: 2, 3: 3}
+    got = {r["k"]: r["dup_count"] for r in stats.duplicate_keys(df, "k").collect()}
+    assert got == {2: 2, 3: 3}
 
 
 def test_referential(spark):
@@ -58,11 +57,30 @@ def test_psi_ks_detect_shift(spark):
     assert rep["psi_exceeded"] and rep["ks_exceeded"]
 
 
-def test_tdigest_accuracy(spark):
-    df = spark.range(0, 20000).select(F.col("id").cast("double").alias("x"))
-    qs = drift.tdigest_quantiles(df, "x", (0.25, 0.5, 0.75))
+def test_approx_quantiles_accuracy(spark):
+    """On 0..n-1 a value is its rank: the estimate (rank ceil(q·n)) sits
+    within the sketch's n / ACCURACY ranks of the exact quantile, plus
+    one rank for nearest-rank against interpolation."""
+    n = 20000
+    df = spark.range(0, n).select(F.col("id").cast("double").alias("x"))
+    qs = drift.approx_quantiles(df, "x", (0.25, 0.5, 0.75))
     for q, v in qs.items():
-        assert abs(v - q * 19999) / 19999 < 0.02, (q, v)
+        assert abs(v - q * (n - 1)) <= n / drift.ACCURACY + 1, (q, v)
+
+
+def test_approx_quantiles_nan_null_and_empty(spark):
+    """NaN and NULL are ignored; an empty, all-NULL or all-NaN column
+    gives NaN per quantile."""
+    import math
+
+    probs = (0.25, 0.5, 0.75, 1.0)
+    df = spark.createDataFrame(
+        [(1.0,), (2.0,), (3.0,), (float("nan"),), (None,)], "x double"
+    )
+    assert drift.approx_quantiles(df, "x", probs) == {0.25: 1.0, 0.5: 2.0, 0.75: 3.0, 1.0: 3.0}
+    for empty in (df.limit(0), df.where("x IS NULL"), df.where("isnan(x)")):
+        got = drift.approx_quantiles(empty, "x", probs)
+        assert list(got) == list(probs) and all(math.isnan(v) for v in got.values())
 
 
 def test_exact_and_lsh_dedup(docs):
@@ -335,44 +353,57 @@ def test_ivf_empty_corpus_returns_empty(spark):
     assert res.count() == 0
 
 
-def test_grouped_tdigest_quantiles_salted_and_not(spark):
-    """Per-key sketch quantiles track the exact per-group percentile in
-    both shapes; the salted two-phase (the skew-rescue path: phase-2
-    input is sketch-sized, never data-sized) agrees with unsalted to
-    sketch tolerance; all-null groups are dropped in both."""
-    from pyspark.sql import functions as F
-
-    from oblate_spark.operators import drift
-
+def test_grouped_approx_quantiles(spark):
+    """Per-key sketch quantiles track the exact per-group percentile on
+    a frame where one key holds 30% of the rows; an all-NULL group is
+    absent, a single-row group returns its one value, NaN is ignored."""
+    hot = F.pmod(F.col("id"), F.lit(10)) < 3
+    group = F.pmod(F.col("id"), F.lit(4))
     df = spark.range(40_000).select(
-        F.concat(F.lit("g"), F.pmod(F.col("id"), F.lit(4)).cast("string")).alias("k"),
-        (F.rand(11) * 50 + F.pmod(F.col("id"), F.lit(4)) * 100).cast("double").alias("x"),
+        F.when(hot, F.lit("hot")).otherwise(F.concat(F.lit("g"), group.cast("string"))).alias("k"),
+        (F.rand(11) * 50 + F.when(hot, F.lit(400)).otherwise(group * 100)).cast("double").alias("x"),
     )
-    nulls = spark.range(10).select(
-        F.lit("all_null").alias("k"), F.lit(None).cast("double").alias("x")
-    )
-    df = df.unionByName(nulls)
-
     exact = {
         (r["k"], q): float(v)
         for r in df.groupBy("k")
         .agg(F.expr("percentile(x, array(0.25, 0.5, 0.75))").alias("e"))
         .collect()
-        if r["e"] is not None
         for q, v in zip((0.25, 0.5, 0.75), r["e"])
     }
-    results = {}
-    for label, kw in (("plain", {}), ("salted", {"salt_buckets": 8})):
-        rows = drift.grouped_tdigest_quantiles(
-            df, "k", "x", (0.25, 0.5, 0.75), **kw
-        ).collect()
-        got = {(r["key"], r["quantile"]): r["value"] for r in rows}
-        assert set(got) == set(exact), label  # all_null group absent
-        for key, v in got.items():
-            assert abs(v - exact[key]) <= 1.5, (label, key, v, exact[key])
-        results[label] = got
-    for key in results["plain"]:
-        assert abs(results["plain"][key] - results["salted"][key]) <= 2.0, key
+    edge = spark.createDataFrame(
+        [("all_null", None), ("all_null", None), ("single", 7.5), ("single", float("nan"))],
+        "k string, x double",
+    )
+    rows = drift.grouped_approx_quantiles(
+        df.unionByName(edge), "k", "x", (0.25, 0.5, 0.75)
+    ).collect()
+    got = {(r["key"], r["quantile"]): r["value"] for r in rows}
+    assert set(got) == set(exact) | {("single", q) for q in (0.25, 0.5, 0.75)}
+    for key, v in exact.items():
+        assert abs(got[key] - v) <= 1.5, (key, got[key], v)
+    assert all(got[("single", q)] == 7.5 for q in (0.25, 0.5, 0.75))
+
+
+def test_outlier_profiles_sketch_path_matches_exact(spark):
+    """``exact=False`` (percentile_approx at ACCURACY) against
+    ``exact=True`` on a small integer frame. With n = 4m + 1 values the
+    sketch's nearest-rank and the exact path's interpolation land on the
+    same order statistic for quartiles, median and MAD, and below
+    ACCURACY values the sketch has no rank error, so fences and counts
+    agree exactly."""
+    import random
+
+    from oblate_spark.operators.stats import iqr_outlier_profile, mad_outlier_profile
+
+    vals = list(range(997)) + [-9000, -5000, 5000, 9000]  # n = 1001 = 4*250 + 1
+    assert len(vals) < drift.ACCURACY
+    random.Random(5).shuffle(vals)
+    df = spark.createDataFrame([(v, 3 * v) for v in vals], "x bigint, y bigint").repartition(4)
+    for profile in (iqr_outlier_profile, mad_outlier_profile):
+        exact = {r.column: r.asDict() for r in profile(df, ["x", "y"]).collect()}
+        approx = {r.column: r.asDict() for r in profile(df, ["x", "y"], exact=False).collect()}
+        assert approx == exact, profile.__name__
+        assert exact["x"]["n_below"] == exact["x"]["n_above"] == 2, exact
 
 
 def test_pii_scrub(spark):

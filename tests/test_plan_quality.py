@@ -720,3 +720,31 @@ def test_iqr_counting_pass_is_joinless(spark):
     assert "Expand" not in plan, plan[:2000]
     tree = [l for l in plan.splitlines() if "+-" in l or l.startswith("Adaptive")]
     assert sum("Exchange" in l for l in tree) == 1, plan[:2000]
+
+
+def test_quantile_sketches_have_no_python_stage(spark, monkeypatch):
+    """Both quantile operators are JVM aggregates: no Python node in
+    either plan. The per-key plan combines its sketch map-side
+    (partial_percentile_approx), which is what makes a hot key safe."""
+    from oblate_spark.operators import drift
+
+    df = spark.range(0, 2000).select(
+        (F.col("id") % 3).alias("k"), F.col("id").cast("double").alias("x")
+    )
+    grouped = drift.grouped_approx_quantiles(df, "k", "x")
+    grouped.collect()
+    plans = [plan_of(grouped)]
+
+    first = type(df).first
+
+    def spy(self):
+        plans.append(plan_of(self))
+        return first(self)
+
+    monkeypatch.setattr(type(df), "first", spy)
+    drift.approx_quantiles(df, "x")
+    assert len(plans) == 2
+    for plan in plans:
+        for node in ("MapInPandas", "FlatMapGroupsInPandas", "EvalPython"):
+            assert node not in plan, plan[:2000]
+    assert "partial_percentile_approx" in plans[0], plans[0][:2000]
