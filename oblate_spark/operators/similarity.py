@@ -16,6 +16,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .binding import let
+
 __all__ = [
     "cosine_expr",
     "knn_bruteforce",
@@ -189,24 +191,29 @@ def ivf_assign(
         ).limit(0)
         return empty, cents
     cent_lit = _centroid_array_literal(cent_rows)
-    # the row's own norm is folded ONCE into a helper column instead of
-    # once per centroid inside cosine_expr (n_centroids-way argmax);
-    # sim = dot/(row_norm * centroid_norm) keeps the exact operand
-    # order of cosine_expr, and the centroid norm is a literal
-    # (bit-identical: _fold_norm_py). Lexicographic struct max: sim
-    # first, then -cid (= smallest cid on tie).
-    base = corpus.withColumn("__nrm", norm_expr(vec))
-    best = F.array_max(
-        F.transform(
-            cent_lit,
-            lambda c: F.struct(
-                (dot_expr(vec, c["vec"]) / (F.col("__nrm") * c["nrm"])).alias("sim"),
-                (-c["cid"]).alias("negcid"),
-                c["cid"].alias("cid"),
+    # the row's vector and its norm are bound once per row (binding.let)
+    # instead of being evaluated once per centroid inside the
+    # n_centroids-way argmax; sim = dot/(row_norm * centroid_norm) keeps
+    # the exact operand order of cosine_expr, and the centroid norm is a
+    # literal (bit-identical: _fold_norm_py). Lexicographic struct max:
+    # sim first, then -cid (= smallest cid on tie).
+    best = let(
+        vec,
+        lambda v: let(
+            norm_expr(v),
+            lambda nrm: F.array_max(
+                F.transform(
+                    cent_lit,
+                    lambda c: F.struct(
+                        (dot_expr(v, c["vec"]) / (nrm * c["nrm"])).alias("sim"),
+                        (-c["cid"]).alias("negcid"),
+                        c["cid"].alias("cid"),
+                    ),
+                )
             ),
-        )
+        ),
     )
-    assigned = base.select(
+    assigned = corpus.select(
         F.col(id_col), vec.alias(vec_col), best["cid"].alias("bucket")
     )
     return assigned, cents
@@ -262,24 +269,32 @@ def knn_ivf(
     # per-query nprobe nearest buckets: sort the same literal array by
     # (-sim, cid) and slice — no window, no shuffle on the query side
     qv = F.col("qv")
-    # query norm folded once per query row (helper column) instead of
-    # once per centroid; centroid norm is a plan literal — same exact
-    # doubles as cosine_expr (see _fold_norm_py)
-    probes_arr = F.slice(
-        F.array_sort(
-            F.transform(
-                cent_lit,
-                lambda c: F.struct(
-                    (-(dot_expr(qv, c["vec"]) / (F.col("__qn") * c["nrm"]))).alias(
-                        "negsim"
-                    ),
-                    c["cid"].alias("cid"),
+    # the query vector and its norm are bound once per query row
+    # (binding.let) instead of being evaluated once per centroid;
+    # centroid norm is a plan literal — same exact doubles as
+    # cosine_expr (see _fold_norm_py)
+    probes_arr = let(
+        qv,
+        lambda q: let(
+            norm_expr(q),
+            lambda qn: F.slice(
+                F.array_sort(
+                    F.transform(
+                        cent_lit,
+                        lambda c: F.struct(
+                            (-(dot_expr(q, c["vec"]) / (qn * c["nrm"]))).alias(
+                                "negsim"
+                            ),
+                            c["cid"].alias("cid"),
+                        ),
+                    )
                 ),
-            )
+                1,
+                nprobe,
+            ),
         ),
-        1,
-        nprobe,
     )
+    # __qn carries the query norm past the join to the candidate scoring
     probes = queries.select(
         F.col(qid).alias("query_id"), F.col(vec_col).alias("qv")
     ).withColumn("__qn", norm_expr(qv)).select(

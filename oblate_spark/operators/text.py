@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .binding import let
+
 __all__ = [
     "STOPWORDS",
     "tokens_expr",
@@ -352,14 +354,20 @@ def tfidf_top_terms(
 def ngrams_expr(toks: Column, n: int) -> Column:
     """Array of space-joined token n-grams (empty when fewer than n
     tokens). Pure Column expression; an engine with list slicing
-    reproduces it exactly."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    reproduces it exactly. The token array is bound once per row with
+    :func:`~.binding.let`: an n-gram lambda that captured a
+    ``tokens_expr`` argument directly would re-split the text once per
+    n-gram."""
+    return let(
+        toks,
+        lambda t: F.when(
+            F.size(t) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - n + 1),
+                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )
 
 
 def ngram_contamination(

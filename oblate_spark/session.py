@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["default_cores", "get_spark", "stop_spark"]
+__all__ = ["default_cores", "get_spark", "session_conf", "stop_spark"]
 
 
 def get_spark(
@@ -39,14 +39,33 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cores), 8)
 
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+    builder = SparkSession.builder.master(f"local[{cores}]").appName(app_name)
+    for k, v in session_conf(shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def session_conf(
+    shuffle_partitions: int, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """Every conf ``get_spark`` sets, ``extra_conf`` applied last.
+
+    The driver heap is resolved once — ``spark.driver.memory`` from
+    ``extra_conf``, else ``$OBLATE_SPARK_DRIVER_MEM``, else 12g — and
+    sets both -Xmx (``spark.driver.memory``) and -Xms, so a smaller
+    ``extra_conf`` heap cannot leave -Xms above -Xmx (the JVM refuses to
+    start)."""
+    mem = (extra_conf or {}).get("spark.driver.memory") or os.environ.get(
+        "OBLATE_SPARK_DRIVER_MEM", "12g"
+    )
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
         # Plan-hygiene default measured in round 6 (OPTIMIZATION_r06.md):
         # InferFiltersFromGenerate copies the ENTIRE generator expression
         # into a pre-Generate filter, so every compiled violations array
@@ -57,10 +76,8 @@ def get_spark(
         # prune-friendly jobs (image report explode) measured ~1s the
         # other way — net strongly positive, and scale-independent
         # (pure per-row compute, no shuffle involvement).
-        .config(
-            "spark.sql.optimizer.excludedRules",
+        "spark.sql.optimizer.excludedRules":
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         # DataFrame call-site capture off. When on, PySpark 4.1 wraps
         # every DataFrame/Column/F.* call in extra py4j round trips
         # (active session, conf read, origin set and reset). Building
@@ -71,11 +88,11 @@ def get_spark(
         # is lost. To get it back, pass extra_conf=
         # {"spark.python.sql.dataFrameDebugging.enabled": "true"} to the
         # first session of the process (PySpark reads it once).
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("OBLATE_SPARK_DRIVER_MEM", "12g"))
-        .config("spark.ui.enabled", "false")
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        "spark.driver.memory": mem,
+        "spark.ui.enabled": "false",
         # JVM tuning for the Arrow-exchange allocation pattern of
         # binary-heavy mapInPandas, measured on local[8..32]:
         # - ParallelGC: default G1 stalls erratically (humongous batch
@@ -83,17 +100,12 @@ def get_spark(
         # - Xms=Xmx + AlwaysPreTouch: without it the heap grows lazily
         #   and young GCs absorb multi-second page-zeroing stalls
         #   (observed 3-4.3 s young pauses on a virtualized host)
-        .config(
-            "spark.driver.extraJavaOptions",
+        "spark.driver.extraJavaOptions":
             "-Djava.net.preferIPv4Stack=true -XX:+UseParallelGC "
-            f"-Xms{os.environ.get('OBLATE_SPARK_DRIVER_MEM', '12g')} -XX:+AlwaysPreTouch",
-        )
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+            f"-Xms{mem} -XX:+AlwaysPreTouch",
+    }
+    conf.update(extra_conf or {})
+    return conf
 
 
 def default_cores() -> int:

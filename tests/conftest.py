@@ -14,7 +14,7 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")), app_name="oblate_spark_tests")
+    s = get_spark(cores=None, app_name="oblate_spark_tests")
     yield s
 
 

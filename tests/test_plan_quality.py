@@ -748,3 +748,120 @@ def test_quantile_sketches_have_no_python_stage(spark, monkeypatch):
         for node in ("MapInPandas", "FlatMapGroupsInPandas", "EvalPython"):
             assert node not in plan, plan[:2000]
     assert "partial_percentile_approx" in plans[0], plans[0][:2000]
+
+
+# --- lambda-body lint over every registered query ---------------------------
+
+_LAMBDA = "org.apache.spark.sql.catalyst.expressions.LambdaFunction"
+_LAMBDA_VAR = "org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable"
+_LEAVES_OK = {
+    "org.apache.spark.sql.catalyst.expressions.AttributeReference",
+    "org.apache.spark.sql.catalyst.expressions.Literal",
+    _LAMBDA_VAR,
+}
+
+
+def _trees(value):
+    """Every tree serialized inside a ``TreeNode.toJSON`` value. A tree
+    is its nodes in pre-order, each with its ``num-children``; plan
+    nodes hold their expressions as such trees in their fields."""
+    if isinstance(value, list) and value and all(
+        isinstance(n, dict) and "num-children" in n for n in value
+    ):
+        nodes = iter(value)
+
+        def take():
+            node = next(nodes)
+            return node, [take() for _ in range(node["num-children"])]
+
+        yield take()
+    elif isinstance(value, list):
+        for v in value:
+            yield from _trees(v)
+    elif isinstance(value, dict):
+        for v in value.values():
+            yield from _trees(v)
+
+
+def _show(tree) -> str:
+    node, kids = tree
+    name = node["class"].rsplit(".", 1)[-1]
+    if name == "AttributeReference":
+        return node["name"]
+    if name == "Literal":
+        return repr(node.get("value"))
+    return f"{name}({', '.join(_show(k) for k in kids)})" if kids else name
+
+
+def _lambda_vars(tree) -> set:
+    node, kids = tree
+    own = {node["exprId"]["id"]} if node["class"] == _LAMBDA_VAR else set()
+    return own.union(*(_lambda_vars(k) for k in kids))
+
+
+def _lambda_leaks(tree, scope=frozenset()):
+    """Maximal subtrees of lambda bodies that use no lambda variable in
+    scope (the lambda's own or an enclosing one's): Catalyst evaluates
+    them once per array element, although their value is the row's."""
+    node, kids = tree
+    if node["class"] == _LAMBDA:
+        body, args = kids[0], kids[1:]
+        yield from _unbound(body, scope | {a[0]["exprId"]["id"] for a in args})
+        return
+    for kid in kids:
+        yield from _lambda_leaks(kid, scope)
+    for value in node.values():
+        for sub in _trees(value):
+            yield from _lambda_leaks(sub, scope)
+
+
+def _unbound(tree, scope):
+    node, kids = tree
+    if node["class"] == _LAMBDA:
+        yield from _lambda_leaks(tree, scope)
+    elif node["class"] in _LEAVES_OK:
+        return
+    elif not _lambda_vars(tree) & scope:
+        yield _show(tree)
+    else:
+        for kid in kids:
+            yield from _unbound(kid, scope)
+
+
+def test_lambda_bodies_bind_outer_expressions(spark, sf001_dir, monkeypatch):
+    """No registered query's optimized plan may evaluate a row-level
+    expression inside a higher-order-function lambda: bind it once per
+    row with ``binding.let``. A helper column does not do it —
+    ``CollapseProject`` re-inlines a column referenced once, even into a
+    lambda. The frames behind an eager ``localCheckpoint`` are linted
+    too: the checkpoint hides their lineage from the final plan (it
+    still checkpoints — iterative lineages grow without bound)."""
+    import json
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    import __spark_entry__ as entrymod
+
+    checkpointed = []
+    real = ClassicDataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
+    leaks = {}
+    for name, build in entrymod.queries().items():
+        checkpointed.clear()
+        frames = [build(spark, sf001_dir), *checkpointed]
+        found = {
+            leak
+            for df in frames
+            for tree in _trees(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+            for leak in _lambda_leaks(tree)
+        }
+        if found:
+            leaks[name] = sorted(found)
+    assert not leaks, "\n".join(
+        f"{name}: {leak}" for name, found in leaks.items() for leak in found
+    )

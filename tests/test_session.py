@@ -1,5 +1,5 @@
-"""Session defaults: host-sized cores, and errors that still carry their
-class with DataFrame call-site capture off."""
+"""Session defaults: host-sized cores, one driver heap size, and errors
+that still carry their class with DataFrame call-site capture off."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.errors import AnalysisException
 
-from oblate_spark.session import default_cores
+from oblate_spark.session import default_cores, session_conf
 
 
 def test_default_cores_env_then_affinity(monkeypatch):
@@ -16,6 +16,27 @@ def test_default_cores_env_then_affinity(monkeypatch):
     assert default_cores() == 3
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert default_cores() == len(os.sched_getaffinity(0))
+
+
+def test_driver_memory_extra_conf_then_env_then_default(monkeypatch):
+    """One heap size feeds both -Xmx (spark.driver.memory) and -Xms: a
+    smaller heap passed through extra_conf must not leave -Xms at the
+    env/default size (the JVM refuses to start). Checked on the conf
+    dict, without starting a JVM."""
+
+    def heap(extra=None):
+        conf = session_conf(8, extra)
+        xms = [o for o in conf["spark.driver.extraJavaOptions"].split() if o.startswith("-Xms")]
+        assert xms == [f"-Xms{conf['spark.driver.memory']}"]
+        return conf["spark.driver.memory"]
+
+    small = {"spark.driver.memory": "1g"}
+    monkeypatch.delenv("OBLATE_SPARK_DRIVER_MEM", raising=False)
+    assert heap() == "12g"
+    assert heap(small) == "1g"
+    monkeypatch.setenv("OBLATE_SPARK_DRIVER_MEM", "3g")
+    assert heap() == "3g"
+    assert heap(small) == "1g"
 
 
 def test_analysis_error_surfaces_without_call_site_capture(spark):
