@@ -12,6 +12,7 @@ notes live next to each oracle.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -43,9 +44,11 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
 
 
+@functools.cache
 def _lineitem_schema():
     """Row-level plan for lineitem: Range + Literal violations
-    (reference semantics: oblate/validate.py:151-205, fields/typings.py:64-102)."""
+    (reference semantics: oblate/validate.py:151-205, fields/typings.py:64-102).
+    Declared once, so every query reuses its compiled plan."""
     from oblate_spark import Schema, fields
     from oblate_spark import validate as V
 
@@ -535,9 +538,10 @@ def q_embedding_near_dup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketched quantiles (``drift.approx_quantiles``, Spark's
-    ``percentile_approx``; the query keeps its historical t-digest
-    name), oracle-gated by tolerance booleans: the
+    """Sketched quantiles (Spark's ``percentile_approx`` at
+    ``drift.ACCURACY``, the sketch of ``drift.approx_quantiles``; the
+    query keeps its historical t-digest name), oracle-gated by tolerance
+    booleans: the
     sketch's estimate must sit within 0.5% of the column's value range of
     the EXACT quantile (computed by Spark's sort-based ``percentile``).
     The tolerance comparison runs entirely Spark-side; the DuckDB oracle
@@ -545,22 +549,30 @@ def q_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden-expected gate, not an independent recomputation (DuckDB never
     sees the sketch values, so it cannot derive the booleans itself). A
     drifting sketch flips a boolean and breaks the hash match."""
-    from oblate_spark.operators.drift import approx_quantiles
+    from oblate_spark.operators.drift import ACCURACY
 
     li = _read(spark, sf_dir, "lineitem")
-    probs = (0.25, 0.5, 0.75)
-    qs = approx_quantiles(li, "l_extendedprice", probs)
-    row = li.select(
-        F.expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75))").alias("exact"),
-        F.min("l_extendedprice").alias("lo"),
-        F.max("l_extendedprice").alias("hi"),
-    ).collect()[0]
-    eps = 0.005 * (float(row["hi"]) - float(row["lo"]))
-    exact = dict(zip(probs, (float(v) for v in row["exact"])))
-    rows = [
-        (float(q), bool(abs(float(v) - exact[q]) <= eps)) for q, v in sorted(qs.items())
+    probs = [0.25, 0.5, 0.75]
+    price = F.col("l_extendedprice").cast("double")
+    # one aggregate row; the verdicts are element-wise and the rows come
+    # out of inline(), so no Python job builds the result
+    agg = li.select(
+        F.percentile_approx(price, probs, ACCURACY).alias("est"),
+        F.percentile(price, F.array(*[F.lit(q) for q in probs])).alias("exact"),
+        (F.lit(0.005) * (F.max(price) - F.min(price))).alias("eps"),
+    )
+    within = [
+        F.abs(F.element_at("est", i) - F.element_at("exact", i)) <= F.col("eps")
+        for i in range(1, len(probs) + 1)
     ]
-    return spark.createDataFrame(rows, "quantile double, within_bounds boolean")
+    return agg.select(
+        F.inline(
+            F.arrays_zip(
+                F.array(*[F.lit(q) for q in probs]).alias("quantile"),
+                F.array(*within).alias("within_bounds"),
+            )
+        )
+    )
 
 
 def q_fd_violations_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3688,7 +3700,7 @@ def oracle_sql() -> dict[str, str]:
                          6)
             FROM cs
         """,
-        "pattern_ratio_events_props": """
+        "pattern_ratio_events_props": r"""
             SELECT count(props)::BIGINT AS n_nonnull,
                    count(CASE WHEN regexp_matches(props, '^\{"k": \d+\}$')
                               THEN 1 END)::BIGINT AS n_matching,

@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from .errors import ErrorCode
 from .fields import Field, Object, json_inner_string, json_token_type, json_trimmed
 
-__all__ = ["CHECK_DDL", "CompiledPlan", "SchemaCompileError", "compile_plan"]
+__all__ = ["CHECK_DDL", "CompiledPlan", "SchemaCompileError", "compile_plan", "reads_run_state"]
 
 CHECK_DDL = "struct<field_key:string,error_code:string,message:string,value_repr:string>"
 KERNEL_DDL = "array<struct<key:string,code:string,message:string>>"
@@ -86,24 +86,44 @@ class CompiledPlan:
         return F.flatten(F.array(*self.check_arrays))
 
 
-def _schema_wants_context(schema_cls: Any, _seen: Optional[set] = None) -> bool:
-    """True if any validator reachable through ``schema_cls`` (including
-    nested Object fields, cycle-safe) declares a context parameter."""
-    from .contexts import wants_context
-
+def _walk_fields(schema_cls: Any, _seen: Optional[set] = None):
+    """Every field reachable through ``schema_cls``, nested Object
+    schemas included (cycle-safe), in declaration order."""
     seen = _seen if _seen is not None else set()
     if schema_cls in seen:
-        return False
+        return
     seen.add(schema_cls)
     for f in schema_cls.__fields__.values():
+        yield f
+        nested = getattr(f, "schema_cls", None)
+        if nested is not None:
+            yield from _walk_fields(nested, seen)
+
+
+def _schema_wants_context(schema_cls: Any) -> bool:
+    """True if any validator reachable through ``schema_cls`` (including
+    nested Object fields) declares a context parameter."""
+    from .contexts import wants_context
+
+    for f in _walk_fields(schema_cls):
         for v in f.walk_validators():
             fn = getattr(v, "_fn", None)
             if fn is not None and wants_context(fn):
                 return True
-        nested = getattr(f, "schema_cls", None)
-        if nested is not None and _schema_wants_context(nested, seen):
-            return True
     return False
+
+
+def reads_run_state(schema_cls: Any) -> bool:
+    """True if compiling ``schema_cls`` runs a hook that can see the
+    run's ``SchemaContext``: a context-taking validator or a
+    ``format_error`` override (subclass method or ``format_error=``),
+    nested schemas included. Such a plan is compiled per run."""
+    if _schema_wants_context(schema_cls):
+        return True
+    return any(
+        f._format_error is not None or type(f).format_error is not Field.format_error
+        for f in _walk_fields(schema_cls)
+    )
 
 
 def _make_kernel_udf(fld: Field):
@@ -486,6 +506,7 @@ def compile_plan(
     mode: str = "typed",
     extra_columns_ok: tuple[str, ...] = ("row_id",),
     is_update: bool = False,
+    ignore_extra: Optional[bool] = None,
 ) -> CompiledPlan:
     """Compile ``schema_cls`` against ``df``.
 
@@ -496,12 +517,15 @@ def compile_plan(
     stored value unchanged", so no required error / default fill fires
     (reference oblate/schema.py:385-436 validates only provided keys;
     LoadContext.is_update() parity).
+    ignore_extra: overrides the schema's ``__config__.ignore_extra``
+    (None keeps it).
     """
     staged = mode == "staged"
     plan = CompiledPlan(schema_cls=schema_cls, mode=mode)
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     columns = set(df.columns)
-    config = schema_cls.__config__
+    if ignore_extra is None:
+        ignore_extra = schema_cls.__config__.ignore_extra
 
     from .fields import MISSING
 
@@ -548,7 +572,7 @@ def compile_plan(
             )
 
     # unknown / extra columns (oblate/schema.py:183-189)
-    if not config.ignore_extra:
+    if not ignore_extra:
         known = {f.load_key for f in schema_cls.__fields__.values()}
         for col in sorted(columns - known - set(extra_columns_ok)):
             plan.schema_violations.append((col, ErrorCode.UNKNOWN_FIELD, "Invalid or unknown field."))

@@ -24,13 +24,15 @@ Catalyst prunes the violations computation where possible.
 
 from __future__ import annotations
 
+import dataclasses
+import weakref
 from dataclasses import dataclass
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compiler import CompiledPlan, compile_plan
+from .compiler import CompiledPlan, _walk_fields, compile_plan, reads_run_state
 
 __all__ = ["ValidationResult", "validate", "raw_from_violations"]
 
@@ -247,6 +249,48 @@ def _nest_into(d: dict, key_path: str, message: str) -> None:
         d.setdefault(key_path, []).append(message)
 
 
+#: schema class -> {(SparkContext, mode, is_update, ignore_extra,
+#: extra_columns_ok, input schema): (fields and validators compiled,
+#: plan without its schema class, violations column)}. Weak on the
+#: class, so a class built at run time is not kept alive by its plans
+#: (which therefore must not reference it); the SparkContext in the key
+#: is held and compared by identity, so a stopped context's entry never
+#: matches a later context's.
+_PLANS: "weakref.WeakKeyDictionary[Any, dict]" = weakref.WeakKeyDictionary()
+
+
+def _compiled(
+    schema_cls: Any, df: DataFrame, *, mode: str, extra_columns_ok: tuple, ignore_extra: bool,
+    is_update: bool,
+) -> tuple[CompiledPlan, Column]:
+    """``schema_cls``'s plan over ``df`` and its violations column,
+    compiled once per key of ``_PLANS`` unless a compile-time hook can
+    see per-run state (:func:`compiler.reads_run_state`)."""
+
+    def compile_() -> tuple[CompiledPlan, Column]:
+        plan = compile_plan(
+            schema_cls, df, mode=mode, extra_columns_ok=extra_columns_ok,
+            is_update=is_update, ignore_extra=ignore_extra,
+        )
+        return plan, plan.violations_column()
+
+    if reads_run_state(schema_cls):
+        return compile_()
+    sc = df.sparkSession.sparkContext
+    key = (sc, mode, is_update, ignore_extra, tuple(extra_columns_ok), df.schema)
+    # add/remove/clear_validator after a compile must recompile
+    parts = [obj for f in _walk_fields(schema_cls) for obj in (f, *f.validators)]
+    plans = _PLANS.setdefault(schema_cls, {})
+    hit = plans.get(key)
+    if hit is not None and len(hit[0]) == len(parts) and all(a is b for a, b in zip(hit[0], parts)):
+        return dataclasses.replace(hit[1], schema_cls=schema_cls), hit[2]
+    plan, violations_col = compile_()
+    for stale in [k for k in plans if k[0] is not sc]:
+        del plans[stale]
+    plans[key] = (parts, dataclasses.replace(plan, schema_cls=None), violations_col)
+    return plan, violations_col
+
+
 def validate(
     df: DataFrame,
     schema_cls: Any,
@@ -268,23 +312,30 @@ def validate(
     ``Schema(data, state=...)``, oblate/contexts.py:42-83): published to
     custom validators and ``format_error`` overrides for the duration of
     plan compilation via :func:`contexts.current_schema_context`, and
-    kept on the returned result as ``.context``."""
+    kept on the returned result as ``.context``.
+
+    The compiled plan is reused: a repeat call with the same schema
+    class, ``mode``, ``is_update``, ``ignore_extra``,
+    ``extra_columns_ok``, input ``df.schema``, validator objects on every
+    field (nested schemas included) and SparkContext applies the check
+    Columns of the first call instead of rebuilding them over py4j.
+    ``add_validator``/``remove_validator``/``clear_validators``
+    recompile; a validator's ``build`` and the fields' other attributes
+    are read at the first compile only. A schema whose compile can see
+    per-run state — a validator taking the SchemaContext, or a
+    ``format_error`` override — is compiled on every call. Declare a
+    schema class once: a class built per call never hits."""
     from .contexts import SchemaContext, _reset_current, _set_current
 
-    if ignore_extra is not None:
-        import copy
-
-        cfg = copy.copy(schema_cls.__config__)
-        cfg.ignore_extra = ignore_extra
-        schema_cls = type(schema_cls.__name__, (schema_cls,), {"__config__": cfg})
-
+    if ignore_extra is None:
+        ignore_extra = schema_cls.__config__.ignore_extra
     ctx = SchemaContext(schema_cls, state=state)
     token = _set_current(ctx)
     try:
-        plan = compile_plan(
-            schema_cls, df, mode=mode, extra_columns_ok=extra_columns_ok, is_update=is_update
+        plan, violations_col = _compiled(
+            schema_cls, df, mode=mode, extra_columns_ok=extra_columns_ok,
+            ignore_extra=bool(ignore_extra), is_update=is_update,
         )
-        violations_col = plan.violations_column()
     finally:
         _reset_current(token)
     ctx._initialized = True

@@ -160,7 +160,9 @@ def lsh_candidate_pairs(
     rows_per_band: int = 4,
 ) -> DataFrame:
     """Distinct candidate near-duplicate pairs (id_a < id_b) that share
-    at least one LSH band."""
+    at least one LSH band. A NULL text is no candidate: its one NULL
+    shingle would give every NULL-text document the same bands."""
+    df = df.filter(F.col(text_col).isNotNull())
     sigs = minhash_signatures(df, id_col=id_col, text_col=text_col, k=k, num_hashes=num_hashes)
     bands = lsh_band_signatures(sigs, id_col=id_col, rows_per_band=rows_per_band)
     # both self-join sides reference the band table; without a

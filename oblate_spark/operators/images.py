@@ -26,6 +26,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import heapq
 import json
 from typing import Optional
@@ -272,10 +273,25 @@ def image_schema(include_bytes: bool = False):
     the dominant-I/O column (a NULL payload surfaces there as
     ``image.decode_failed: payload is NULL``). Scanning bytes once
     instead of four times is the difference between scaling and
-    thrashing at 100 TB (and measurably on local[32])."""
+    thrashing at 100 TB (and measurably on local[32]).
+
+    One class per argument, declared on first use: ``engine.validate``
+    reuses a compiled plan per schema class, so repeat validations of
+    the image table skip recompiling it."""
+    return _image_schema(bool(include_bytes))
+
+
+@functools.cache
+def _image_schema(include_bytes: bool):
     from .. import fields
     from .. import validate as V
     from ..schema import Schema
+
+    if include_bytes:
+        class ImageRowWithBytes(_image_schema(False)):
+            bytes = fields.Binary()
+
+        return ImageRowWithBytes
 
     class ImageRow(Schema):
         image_id = fields.String()
@@ -285,11 +301,6 @@ def image_schema(include_bytes: bool = False):
         caption = fields.String(validators=[V.Length(max=120)])
         phash = fields.Integer()
 
-    if include_bytes:
-        class ImageRowWithBytes(ImageRow):
-            bytes = fields.Binary()
-
-        return ImageRowWithBytes
     return ImageRow
 
 

@@ -14,7 +14,9 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .binding import let
 
@@ -178,8 +180,14 @@ def ivf_assign(
     # just collected: a downstream consumer (knn_ivf probes the same
     # centroids) re-collecting it gets these exact rows for free instead
     # of re-running the TakeOrdered corpus scan — which would also
-    # silently couple correctness to the derivation being deterministic
-    cents = corpus.sparkSession.createDataFrame(cent_rows, cents.schema)
+    # silently couple correctness to the derivation being deterministic.
+    # The rows go over Arrow: createDataFrame(list) would build a Python
+    # RDD scan, a Python job on every collect.
+    cents = corpus.sparkSession.createDataFrame(
+        pa.Table.from_pylist(
+            [r.asDict(recursive=True) for r in cent_rows], schema=to_arrow_schema(cents.schema)
+        )
+    )
     vec = F.col(vec_col)
     if not cent_rows:
         # empty corpus / empty centroid frame: zero assignments, not an

@@ -6,6 +6,7 @@ a failed round even if the library itself is healthy."""
 from __future__ import annotations
 
 import os
+import warnings
 
 import duckdb
 import pytest
@@ -30,6 +31,17 @@ def test_oracles_cover_queries():
     assert set(oracles) <= set(qs)
     # every SQL-expressible operator family has an oracle
     assert len(oracles) >= 19
+
+
+def test_entry_compiles_without_warnings():
+    # an invalid escape sequence is a DeprecationWarning on 3.11, a
+    # SyntaxWarning on 3.12+ and slated to become a SyntaxError
+    with open(entrymod.__file__, encoding="utf-8") as fh:
+        source = fh.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", SyntaxWarning)
+        warnings.simplefilter("error", DeprecationWarning)
+        compile(source, entrymod.__file__, "exec")
 
 
 @pytest.fixture(scope="module")

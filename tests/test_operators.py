@@ -92,6 +92,18 @@ def test_exact_and_lsh_dedup(docs):
     assert not any(4 in p or 5 in p for p in pairs)  # unrelated docs don't
 
 
+def test_lsh_skips_null_texts(spark):
+    """NULL texts share one NULL shingle and so every band; they must not
+    become candidates of each other."""
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, None), (4, text), (5, text)],
+        "doc_id long, text string",
+    )
+    cand = dedup.lsh_candidate_pairs(df, id_col="doc_id", text_col="text").collect()
+    assert {(r["id_a"], r["id_b"]) for r in cand} == {(4, 5)}
+
+
 def test_jaccard_threshold(docs):
     out = dedup.ngram_jaccard_pairs(docs, id_col="doc_id", text_col="text", threshold=0.7)
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}

@@ -6,6 +6,8 @@ silently de-optimizes the plan fails here even if results stay correct.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -865,3 +867,143 @@ def test_lambda_bodies_bind_outer_expressions(spark, sf001_dir, monkeypatch):
     assert not leaks, "\n".join(
         f"{name}: {leak}" for name, found in leaks.items() for leak in found
     )
+
+
+# -- compiled-plan reuse (engine.validate) -----------------------------------
+
+
+@contextlib.contextmanager
+def _py4j_commands():
+    """Count driver->JVM py4j commands this thread sends inside the
+    block. py4j's finalizer thread sends proxy deletions for earlier
+    garbage at its own pace; those are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    orig = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += threading.get_ident() == caller
+        return orig(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield sent
+    finally:
+        ClientServerConnection.send_command = orig
+
+
+def _violations(res):
+    return sorted(tuple(r) for r in res.violations.collect())
+
+
+def _staged_lineitem(li):
+    return li.select(
+        "row_id",
+        F.when(F.col("l_orderkey") % 97 == 0, F.lit('"bad"'))
+        .otherwise(F.col("l_quantity").cast("string"))
+        .alias("l_quantity"),
+        F.concat(F.lit('"'), F.col("l_returnflag"), F.lit('"')).alias("l_returnflag"),
+    )
+
+
+def test_repeat_validate_reuses_compiled_plan(spark, images_path, sf001_dir):
+    """A second validate of a known schema over the same input schema
+    applies the first call's check Columns: at most a tenth of the
+    first call's py4j round trips, same violations."""
+    import os
+
+    import __spark_entry__ as entry
+    from oblate_spark import engine
+    from oblate_spark.operators.images import image_schema
+
+    def lineitem():
+        return entry._with_row_id(spark.read.parquet(os.path.join(sf001_dir, "lineitem.parquet")))
+
+    staged = dict(mode="staged", row_id="row_id", ignore_extra=True)
+    cases = {  # name: (input frame, validate call)
+        "images": (lambda: spark.read.parquet(images_path).drop("bytes"),
+                   lambda df: image_schema().validate(df, row_id="image_id",
+                                                      extra_columns_ok=("image_id",))),
+        "lineitem": (lineitem, lambda df: entry._lineitem_schema().validate(
+            df, row_id="row_id", ignore_extra=True)),
+        "staged": (lambda: _staged_lineitem(lineitem()),
+                   lambda df: entry._lineitem_schema().validate(df, **staged)),
+    }
+    engine._PLANS.clear()
+    for name, (frame, run) in cases.items():
+        counts, results = [], []
+        for _ in range(2):
+            df = frame()
+            df.schema  # noqa: B018 - the input's schema, fetched before counting
+            with _py4j_commands() as sent:
+                results.append(run(df))
+            counts.append(sent[0])
+        assert counts[1] * 10 <= counts[0], (name, counts)
+        assert _violations(results[0]) == _violations(results[1]), name
+    assert image_schema() is image_schema(False) is image_schema(include_bytes=False)
+
+
+def test_context_reading_hooks_see_each_calls_state(spark):
+    """A validator that takes the SchemaContext and a format_error
+    override both run at compile time, so their plans are compiled per
+    call and see that call's state."""
+    from oblate_spark.errors import ErrorCode
+
+    def at_most_limit(col, ctx):
+        return col <= F.lit(ctx.state["limit"])
+
+    def fmt(code, ec):
+        return f"over {ec.context.state['limit']}" if code == ErrorCode.RANGE else None
+
+    class ContextValidator(Schema):
+        x = fields.Integer(validators=[V.ExprValidator(at_most_limit)])
+
+    class Inner(Schema):
+        y = fields.Integer(validators=[V.Range(0, 1)], format_error=fmt)
+
+    class NestedFormatError(Schema):
+        o = fields.Object(Inner)
+
+    df = spark.createDataFrame([(5,)], "x long")
+    nested = spark.createDataFrame([((5,),)], "o struct<y:long>")
+    for limit in (1, 10, 1):
+        got = _violations(ContextValidator.validate(df, state={"limit": limit}))
+        assert len(got) == (1 if limit == 1 else 0), (limit, got)
+        got = _violations(NestedFormatError.validate(nested, state={"limit": limit}))
+        assert [(r[1], r[3]) for r in got] == [("o.y", f"over {limit}")], (limit, got)
+
+
+def test_validator_changes_after_compile_take_effect(spark):
+    class Mutable(Schema):
+        x = fields.Integer()
+
+    df = spark.createDataFrame([(5, "e")], "x long, extra string")
+    codes = lambda **kw: [r[2] for r in _violations(Mutable.validate(df, **kw))]  # noqa: E731
+
+    assert codes(ignore_extra=True) == []
+    check = V.Range(0, 1)
+    Mutable.__fields__["x"].add_validator(check)
+    assert codes(ignore_extra=True) == ["validate.range"]
+    assert sorted(codes()) == ["schema.unknown_field", "validate.range"]
+    Mutable.__fields__["x"].remove_validator(check)
+    assert codes(ignore_extra=True) == []
+
+
+def test_compiled_plans_do_not_keep_schema_classes_alive(spark):
+    import gc
+    import weakref
+
+    def declare_and_validate():
+        class Temporary(Schema):
+            x = fields.Integer(validators=[V.Range(0, 1)])
+
+        Temporary.validate(spark.createDataFrame([(5,)], "x long"))
+        return weakref.ref(Temporary)
+
+    ref = declare_and_validate()
+    gc.collect()
+    assert ref() is None

@@ -69,6 +69,73 @@ def test_phash_invariant_to_encoding(seed):
     assert len(hashes) == 1  # lossless codecs -> identical phash
 
 
+# The full-image integral resize, BMP decode and pHash as first written:
+# the current kernel must reproduce them bit for bit.
+
+
+def _reference_resize_area(gray, size=32, out_h=None):
+    h, w = gray.shape
+    out_h = size if out_h is None else out_h
+    ys = (np.arange(out_h + 1) * h // out_h).astype(np.int64)
+    xs = (np.arange(size + 1) * w // size).astype(np.int64)
+    y0, y1 = ys[:-1], np.maximum(ys[1:], ys[:-1] + 1)
+    x0, x1 = xs[:-1], np.maximum(xs[1:], xs[:-1] + 1)
+    csum = np.zeros((h + 1, w + 1), dtype=np.float64)
+    np.cumsum(np.cumsum(gray, axis=0, dtype=np.float64), axis=1, out=csum[1:, 1:])
+    y0c, y1c = y0[:, None], y1[:, None]
+    box = csum[y1c, x1] - csum[y0c, x1] - csum[y1c, x0] + csum[y0c, x0]
+    area = (y1 - y0)[:, None] * (x1 - x0)[None, :]
+    return box / area
+
+
+def _reference_bmp_pixels(data, w, h, flipped):
+    row_size = (w * 3 + 3) & ~3
+    rows = np.frombuffer(data[54 : 54 + row_size * h], dtype=np.uint8).reshape(h, row_size)[:, : w * 3]
+    img = rows.reshape(h, w, 3)[:, :, ::-1]
+    return (img[::-1] if flipped else img).copy()
+
+
+def _reference_phash64(pixels):
+    gray = pixels @ np.array([0.299, 0.587, 0.114])
+    d = codecs._DCT32 @ _reference_resize_area(gray, 32) @ codecs._DCT32.T
+    block = d[:8, :8].ravel()[1:]
+    bits = block > np.partition(block, 31)[31]
+    val = int.from_bytes(np.packbits(bits, bitorder="little").tobytes(), "little")
+    return val - (1 << 64) if val >= 1 << 63 else val
+
+
+@given(st.integers(min_value=1, max_value=150), st.integers(min_value=1, max_value=150),
+       st.one_of(st.none(), st.integers(min_value=1, max_value=64)),
+       st.integers(min_value=0, max_value=2**32 - 1))
+@settings(max_examples=200, deadline=None)
+def test_resize_area_matches_reference(h, w, out_h, seed):
+    gray = np.random.default_rng(seed).random((h, w)) * 255
+    got = codecs._resize_area(gray, 32, out_h)
+    assert got.tobytes() == _reference_resize_area(gray, 32, out_h).tobytes()
+
+
+@given(st.integers(min_value=1, max_value=140), st.integers(min_value=1, max_value=140),
+       st.sampled_from(["bmp", "bmp-top-down", "png", "ppm"]),
+       st.integers(min_value=0, max_value=2**32 - 1))
+@settings(max_examples=60, deadline=None)
+def test_decode_and_phash_match_reference(w, h, fmt, seed):
+    import struct
+
+    px = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
+    blob = codecs.encode_image(px, fmt.split("-")[0])
+    if fmt == "bmp-top-down":  # negative height, rows stored top first
+        row_size = (w * 3 + 3) & ~3
+        rows = np.frombuffer(blob[54:], dtype=np.uint8).reshape(h, row_size)[::-1]
+        blob = bytearray(blob[:54] + rows.tobytes())
+        struct.pack_into("<i", blob, 22, -h)
+        blob = bytes(blob)
+    out = codecs.decode_image(blob)
+    ref = _reference_bmp_pixels(blob, w, h, fmt == "bmp") if fmt.startswith("bmp") else px
+    assert out.flags.c_contiguous and out.dtype == np.uint8
+    assert out.shape == ref.shape and out.tobytes() == ref.tobytes()
+    assert codecs.phash64(out) == _reference_phash64(ref)
+
+
 @settings(deadline=None, max_examples=20, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(values=st.lists(st.floats(allow_nan=False, allow_infinity=False), min_size=50, max_size=500))
 def test_approx_quantiles_are_order_statistics(spark, values):
