@@ -18,8 +18,8 @@ The code is master-agnostic: everything in ``oblate_spark`` builds
 plans against whatever SparkSession exists. Executor sizing note: the
 payload kernel runs one python worker per task slot — budget ~1 core +
 ~1 GB per slot for the python side (the reason executor-cores stays
-moderate), and prefer the checkpointed report (``materialize
-='checkpoint'``) so constraint branches never re-decode.
+moderate). Each group's violations are written by ``ResumableRun``,
+which is the run's resume point.
 """
 
 from __future__ import annotations
@@ -40,14 +40,14 @@ def main() -> None:
     spark = SparkSession.builder.appName("oblate_spark_validation").getOrCreate()
 
     from oblate_spark.checkpoint import ResumableRun
-    from oblate_spark.operators.images import validate_image_table
+    from oblate_spark.operators.images import release_report, validate_image_table
 
     run = ResumableRun(spark, args.table, args.out, group_size=args.group_size)
 
     def job(gdf):
         return validate_image_table(gdf, phash_tolerance=args.phash_tolerance)
 
-    manifest = run.run(job)
+    manifest = run.run(job, cleanup=release_report)
     done = sum(1 for g in manifest["groups"].values() if g["done"])
     print(f"completed {done}/{len(run.groups)} groups; violations at {args.out}")
 

@@ -165,20 +165,22 @@ def lsh_candidate_pairs(
     df = df.filter(F.col(text_col).isNotNull())
     sigs = minhash_signatures(df, id_col=id_col, text_col=text_col, k=k, num_hashes=num_hashes)
     bands = lsh_band_signatures(sigs, id_col=id_col, rows_per_band=rows_per_band)
-    # both self-join sides reference the band table; without a
-    # materialization the whole shingle->minhash->band aggregation runs
-    # TWICE (the sides differ by alias, so ReuseExchange never fires —
-    # plan audit round 6). The band table is corpus_rows x n_bands tiny
-    # rows, so the localCheckpoint is cheap at any scale.
-    bands = bands.localCheckpoint(eager=True)
-    a = bands.select(F.col(id_col).alias("id_a"), "band", "band_sig")
-    b = bands.select(F.col(id_col).alias("id_b"), "band", "band_sig")
     return (
-        a.join(b, on=["band", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        self_join_pairs(bands, id_col, ["band", "band_sig"])
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
+
+
+def self_join_pairs(df: DataFrame, id_col: str, keys: list) -> DataFrame:
+    """``df`` joined to itself on ``keys`` with ``a.id < b.id``; select
+    the sides' columns as ``a.<col>`` / ``b.<col>``. Both sides alias the
+    whole frame, so their plans match and ReuseExchange computes it once."""
+    a, b = df.alias("a"), df.alias("b")
+    on = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for key in keys:
+        on = on & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+    return a.join(b, on)
 
 
 def _token_set(col):
@@ -412,16 +414,6 @@ def simhash_hamming_pairs(
     banded = signatures.select(
         F.col(id_col), F.col(sig_col), F.explode(slices).alias("s")
     ).select(id_col, sig_col, "s.band", "s.slice_val")
-    # same double-computation hazard as lsh_candidate_pairs: the
-    # signature aggregation feeding both self-join sides would run twice
-    # without this (rows = corpus x bands, so materialization is cheap)
-    banded = banded.localCheckpoint(eager=True)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col(sig_col).alias("sig_a"), "band", "slice_val"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col(sig_col).alias("sig_b"), "band", "slice_val"
-    )
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
 
     def _slice(col, i):
@@ -443,8 +435,15 @@ def simhash_hamming_pairs(
         ).otherwise(F.lit(True))
         first_band = first_band & lower_differs
     return (
-        a.join(b, on=["band", "slice_val"])
-        .filter((F.col("id_a") < F.col("id_b")) & first_band)
+        self_join_pairs(banded, id_col, ["band", "slice_val"])
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.band").alias("band"),
+            F.col(f"a.{sig_col}").alias("sig_a"),
+            F.col(f"b.{sig_col}").alias("sig_b"),
+        )
+        .filter(first_band)
         .select("id_a", "id_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_distance)
     )

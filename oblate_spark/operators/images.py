@@ -310,8 +310,6 @@ def validate_image_table(
     phash_tolerance: int = 0,
     check_payload: bool = True,
     check_unique: bool = True,
-    materialize: str = "cache",
-    checkpoint_dir: Optional[str] = None,
     source_path: Optional[str] = None,
     max_files: Optional[int] = None,
 ) -> DataFrame:
@@ -321,14 +319,14 @@ def validate_image_table(
 
     Architecture (the 100 TB invariant): ONE heavy pass. The payload
     kernel is the only consumer of the multi-KB ``bytes`` column; it
-    emits a compact metadata report (~150 B/row) that is materialized
-    (``cache`` locally; ``checkpoint`` = parquet table on a cluster,
-    doubling as the resume point) and every constraint branch — schema
-    checks, payload consistency, uniqueness — runs over the report.
-    Without materialization each union branch would re-execute the
-    kernel; with separate scans the Arrow serialization of the binaries
-    dominated the job (measured: 4 scans made local[32] slower than
-    local[8]).
+    emits a compact metadata report (~150 B/row) and every constraint
+    branch — schema checks, payload consistency, uniqueness — runs over
+    the report. With ``check_unique`` the report has two consumers, so it
+    is cached: otherwise each union branch would re-execute the kernel
+    (release it with :func:`release_report`). Without ``check_unique``
+    the one fused branch reads it and nothing is cached. A resumable run
+    (``checkpoint.ResumableRun``) writes each group's violations, so a
+    cluster job needs no report checkpoint of its own.
     """
     from .stats import multi_key_uniqueness_violations
 
@@ -343,12 +341,7 @@ def validate_image_table(
             )
         else:
             report = image_payload_report(df)
-        if materialize == "checkpoint":
-            if checkpoint_dir is None:
-                raise ValueError("materialize='checkpoint' requires checkpoint_dir")
-            report.write.mode("overwrite").parquet(checkpoint_dir)
-            report = df.sparkSession.read.parquet(checkpoint_dir)
-        elif materialize == "cache":
+        if check_unique:  # a second branch reads the report
             report = report.cache()
         base = report
     else:
@@ -393,19 +386,19 @@ def validate_image_table(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    # cache-lifetime contract: with materialize='cache' the report stays
-    # cached so every branch of the returned (lazy) union reuses it; it
-    # is exposed here so long-lived sessions can release it after
-    # consuming the result (see release_report()).
-    out._oblate_cached_report = report if (check_payload and materialize == "cache") else None
+    # cache-lifetime contract: a cached report stays cached so every
+    # branch of the returned (lazy) union reuses it; it is exposed here
+    # so long-lived sessions can release it after consuming the result
+    # (see release_report()).
+    out._oblate_cached_report = report if (check_payload and check_unique) else None
     return out
 
 
 def release_report(validation_result: DataFrame) -> None:
     """Unpersist the payload report cached by ``validate_image_table``
-    (no-op for checkpointed or payload-less runs). Call after the
-    violations DataFrame has been consumed — in a long-lived session the
-    cached report otherwise pins executor storage memory."""
+    (no-op when it cached none: no payload or no uniqueness check). Call
+    after the violations DataFrame has been consumed — in a long-lived
+    session the cached report otherwise pins executor storage memory."""
     rep = getattr(validation_result, "_oblate_cached_report", None)
     if rep is not None:
         rep.unpersist()

@@ -221,8 +221,11 @@ def ivf_assign(
             ),
         ),
     )
+    # array_max over the non-empty literal is never NULL; the coalesce
+    # only says so, so a join's inferred isnotnull(bucket) folds away
+    # instead of evaluating the argmax a second time in a pushed filter
     assigned = corpus.select(
-        F.col(id_col), vec.alias(vec_col), best["cid"].alias("bucket")
+        F.col(id_col), vec.alias(vec_col), F.coalesce(best["cid"], F.lit(-1)).alias("bucket")
     )
     return assigned, cents
 
@@ -352,17 +355,13 @@ def ivf_bucket_candidate_pairs(
     assigned, _ = ivf_assign(
         corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids
     )
-    # both self-join sides reference the assignment; materialize the
-    # slim (id, bucket) table once or the per-vector centroid argmax
-    # (n_centroids cosine folds per row) runs twice — same pattern as
-    # lsh_candidate_pairs (round 6)
-    assigned = assigned.select(F.col(id_col), "bucket").localCheckpoint(eager=True)
-    a = assigned.select(F.col(id_col).alias("id_a"), "bucket")
-    b = assigned.select(F.col(id_col).alias("id_b"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+    from .dedup import self_join_pairs
+
+    # the argmax has no exchange of its own to reuse: without this
+    # shuffle the planner broadcasts one side and runs the argmax twice
+    buckets = assigned.select(F.col(id_col), "bucket").repartition("bucket")
+    return self_join_pairs(buckets, id_col, ["bucket"]).select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
     )
 
 

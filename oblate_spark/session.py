@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["default_cores", "get_spark", "session_conf", "stop_spark"]
+__all__ = ["default_cores", "default_heap", "get_spark", "session_conf", "stop_spark"]
 
 
 def get_spark(
@@ -53,12 +53,14 @@ def session_conf(
     """Every conf ``get_spark`` sets, ``extra_conf`` applied last.
 
     The driver heap is resolved once — ``spark.driver.memory`` from
-    ``extra_conf``, else ``$OBLATE_SPARK_DRIVER_MEM``, else 12g — and
-    sets both -Xmx (``spark.driver.memory``) and -Xms, so a smaller
-    ``extra_conf`` heap cannot leave -Xms above -Xmx (the JVM refuses to
-    start)."""
-    mem = (extra_conf or {}).get("spark.driver.memory") or os.environ.get(
-        "OBLATE_SPARK_DRIVER_MEM", "12g"
+    ``extra_conf``, else ``$OBLATE_SPARK_DRIVER_MEM``, else
+    ``default_heap()`` — and sets both -Xmx (``spark.driver.memory``)
+    and -Xms, so a smaller ``extra_conf`` heap cannot leave -Xms above
+    -Xmx (the JVM refuses to start)."""
+    mem = (
+        (extra_conf or {}).get("spark.driver.memory")
+        or os.environ.get("OBLATE_SPARK_DRIVER_MEM")
+        or default_heap()
     )
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
@@ -106,6 +108,14 @@ def session_conf(
     }
     conf.update(extra_conf or {})
     return conf
+
+
+def default_heap() -> str:
+    """Half the host's physical memory, at most 12g: the heap is
+    pre-touched (-Xms = -Xmx), so a fixed 12g would claim most of a
+    small host before the first job."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2 >> 20, 12 << 10)}m"
 
 
 def default_cores() -> int:

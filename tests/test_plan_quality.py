@@ -830,36 +830,49 @@ def _unbound(tree, scope):
             yield from _unbound(kid, scope)
 
 
-def test_lambda_bodies_bind_outer_expressions(spark, sf001_dir, monkeypatch):
-    """No registered query's optimized plan may evaluate a row-level
-    expression inside a higher-order-function lambda: bind it once per
-    row with ``binding.let``. A helper column does not do it —
-    ``CollapseProject`` re-inlines a column referenced once, even into a
-    lambda. The frames behind an eager ``localCheckpoint`` are linted
-    too: the checkpoint hides their lineage from the final plan (it
-    still checkpoints — iterative lineages grow without bound)."""
-    import json
+@pytest.fixture(scope="module")
+def registry_builds(spark, sf001_dir):
+    """Every registered query built at sf0.001, with the frames each
+    build passed to ``localCheckpoint`` and the names of the functions
+    that called it: ``{name: (frame, checkpointed frames)}``, callers."""
+    import sys
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     import __spark_entry__ as entrymod
 
-    checkpointed = []
+    checkpointed, callers = [], set()
     real = ClassicDataFrame.localCheckpoint
 
     def recording(self, *args, **kwargs):
         checkpointed.append(self)
+        callers.add(sys._getframe(1).f_code.co_name)
         return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
+    builds = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClassicDataFrame, "localCheckpoint", recording)
+        for name, build in entrymod.queries().items():
+            checkpointed.clear()
+            builds[name] = (build(spark, sf001_dir), list(checkpointed))
+    return builds, callers
+
+
+def test_lambda_bodies_bind_outer_expressions(registry_builds):
+    """No registered query's optimized plan may evaluate a row-level
+    expression inside a higher-order-function lambda: bind it once per
+    row with ``binding.let``. A helper column does not do it —
+    ``CollapseProject`` re-inlines a column referenced once, even into a
+    lambda. The frames behind an eager ``localCheckpoint`` are linted
+    too: the checkpoint hides their lineage from the final plan."""
+    import json
+
     leaks = {}
-    for name, build in entrymod.queries().items():
-        checkpointed.clear()
-        frames = [build(spark, sf001_dir), *checkpointed]
+    for name, (df, checkpointed) in registry_builds[0].items():
         found = {
             leak
-            for df in frames
-            for tree in _trees(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+            for frame in [df, *checkpointed]
+            for tree in _trees(json.loads(frame._jdf.queryExecution().optimizedPlan().toJSON()))
             for leak in _lambda_leaks(tree)
         }
         if found:
@@ -867,6 +880,102 @@ def test_lambda_bodies_bind_outer_expressions(spark, sf001_dir, monkeypatch):
     assert not leaks, "\n".join(
         f"{name}: {leak}" for name, found in leaks.items() for leak in found
     )
+
+
+def test_only_iterative_and_exact_passes_cut_lineage(registry_builds):
+    """``localCheckpoint`` has no lineage to recompute from, so a lost
+    executor fails the job. Only connected components (it iterates) and
+    the exact IQR/MAD passes (a joinless counting pass over the
+    checkpoint) cut lineage; a self-join shares its exchange instead."""
+    assert registry_builds[1] == {
+        "duplicate_clusters", "iqr_outlier_profile", "mad_outlier_profile",
+    }
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark):
+    """Collect the ids of the Spark jobs started inside the block (a job
+    group, read back once the listener bus has drained)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-quality-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    jobs = []
+    try:
+        yield jobs
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def near_dup_inputs(spark, tmp_path_factory):
+    """Documents and vectors read back from parquet: a ``spark.range``
+    id keeps its range partitioning, which would hide the aggregates'
+    exchanges, and ``createDataFrame(list)`` is an ExistingRDD scan."""
+    base = tmp_path_factory.mktemp("near_dup")
+    spark.range(400).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ", F.lit("the quick brown fox"), (F.col("id") % 37).cast("string"),
+            F.lit("jumps over the lazy dog"),
+        ).alias("text"),
+    ).write.parquet(str(base / "docs"))
+    spark.range(300).select(
+        F.col("id").alias("vid"),
+        F.array(*[F.sin((F.col("id") + 1) * (k + 1)) for k in range(8)]).alias("vec"),
+    ).write.parquet(str(base / "vecs"))
+    return spark.read.parquet(str(base / "docs")), spark.read.parquet(str(base / "vecs"))
+
+
+def test_candidate_self_joins_reuse_one_exchange(spark, near_dup_inputs):
+    """The LSH, SimHash and IVF candidate self-joins start no job of
+    their own (IVF: none beyond ``ivf_assign``'s centroid collect), and
+    their executed plans read the shared side back through a
+    ReusedExchange, not from a checkpoint (ExistingRDD)."""
+    from oblate_spark.operators.dedup import lsh_candidate_pairs, simhash, simhash_hamming_pairs
+    from oblate_spark.operators.similarity import ivf_assign, ivf_bucket_candidate_pairs
+
+    docs, vecs = near_dup_inputs
+    sigs = simhash(docs, id_col="doc_id", text_col="text")
+    ivf_args = dict(id_col="vid", vec_col="vec", n_centroids=8)
+    with _spark_jobs(spark) as jobs:
+        frames = {
+            "lsh": lsh_candidate_pairs(docs, id_col="doc_id", text_col="text"),
+            "simhash": simhash_hamming_pairs(sigs, id_col="doc_id"),
+        }
+    assert not jobs, jobs
+    with _spark_jobs(spark) as assign_jobs:
+        ivf_assign(vecs, **ivf_args)
+    with _spark_jobs(spark) as jobs:
+        frames["ivf"] = ivf_bucket_candidate_pairs(vecs, **ivf_args)
+    assert len(jobs) <= len(assign_jobs), (jobs, assign_jobs)
+    for name, df in frames.items():
+        assert df.collect(), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ReusedExchange" in plan and "ExistingRDD" not in plan, (name, plan)
+
+
+def test_image_report_cached_only_for_two_branches(spark, images_path):
+    """The payload report is cached only when the uniqueness branch
+    reads it too; ``release_report`` unpersists exactly that cache."""
+    from pyspark import StorageLevel
+
+    from oblate_spark.operators.images import release_report, validate_image_table
+
+    df = spark.read.parquet(images_path)
+    single = validate_image_table(df, check_unique=False)
+    assert "InMemoryTableScan" not in plan_of(single)
+    both = validate_image_table(df)
+    report = both._oblate_cached_report
+    assert "InMemoryTableScan" in plan_of(both)
+    assert report.storageLevel != StorageLevel.NONE
+    release_report(single)
+    assert report.storageLevel != StorageLevel.NONE
+    release_report(both)
+    assert report.storageLevel == StorageLevel.NONE
 
 
 # -- compiled-plan reuse (engine.validate) -----------------------------------

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.errors import AnalysisException
 
-from oblate_spark.session import default_cores, session_conf
+from oblate_spark.session import default_cores, default_heap, session_conf
 
 
 def test_default_cores_env_then_affinity(monkeypatch):
@@ -32,11 +32,26 @@ def test_driver_memory_extra_conf_then_env_then_default(monkeypatch):
 
     small = {"spark.driver.memory": "1g"}
     monkeypatch.delenv("OBLATE_SPARK_DRIVER_MEM", raising=False)
-    assert heap() == "12g"
+    assert heap() == default_heap()
     assert heap(small) == "1g"
     monkeypatch.setenv("OBLATE_SPARK_DRIVER_MEM", "3g")
     assert heap() == "3g"
     assert heap(small) == "1g"
+
+
+def test_default_heap_is_half_the_host_at_most_12g(monkeypatch):
+    """Without an explicit heap the session takes half the physical
+    memory, capped at 12g; checked on the conf dict."""
+
+    def on_host(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (gib << 30) // 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+        return session_conf(8)["spark.driver.memory"]
+
+    monkeypatch.delenv("OBLATE_SPARK_DRIVER_MEM", raising=False)
+    assert on_host(15) == "7680m"
+    assert on_host(24) == "12288m"
+    assert on_host(256) == "12288m"
 
 
 def test_analysis_error_surfaces_without_call_site_capture(spark):
