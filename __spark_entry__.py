@@ -40,8 +40,24 @@ STOPWORDS = {
 }
 
 
+#: path -> ((st_mtime_ns, st_size), StructType) of every table read so far
+_SCHEMAS: dict = {}
+
+
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    """Read a table file with the schema inferred at its first read. A
+    schema-less ``read.parquet`` starts a footer-inference job (~80 ms
+    on 4 cores); one handed the schema starts none. A rewritten file
+    changes its stamp and is inferred again."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    known = _SCHEMAS.get(path)
+    if known is not None and known[0] == stamp:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 @functools.cache
@@ -57,6 +73,13 @@ def _lineitem_schema():
         l_returnflag = fields.Literal("A", "N")
 
     return LineitemRow
+
+
+def _scalar(spark: SparkSession, name: str, val: float) -> DataFrame:
+    """A one-row, one-double result rounded to 6 decimals, as a JVM
+    plan: ``createDataFrame(list)`` would be a Python RDD scan, a Python
+    job on every core at each collect."""
+    return spark.range(1).select(F.lit(float(f"{val:.6f}")).cast("double").alias(name))
 
 
 def _with_row_id(df: DataFrame) -> DataFrame:
@@ -205,12 +228,12 @@ def _drift_stats(spark: SparkSession, sf_dir: str) -> dict:
 
 def q_psi_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     val = _drift_stats(spark, sf_dir)["psi"]
-    return spark.createDataFrame([(float(f"{val:.6f}"),)], "psi double")
+    return _scalar(spark, "psi", val)
 
 
 def q_ks_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     val = _drift_stats(spark, sf_dir)["ks"]
-    return spark.createDataFrame([(float(f"{val:.6f}"),)], "ks double")
+    return _scalar(spark, "ks", val)
 
 
 def q_categorical_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,7 +250,7 @@ def q_categorical_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         actual_cond=F.col("user_id") % 2 == 1,
         eps=PSI_EPS,
     )
-    return spark.createDataFrame([(float(f"{val:.6f}"),)], "psi double")
+    return _scalar(spark, "psi", val)
 
 
 def q_exact_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,8 +1122,12 @@ def q_drift_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     individual psi_/ks_ queries are kept for back-compat; each recomputes
     the shared pass under the per-query driver contract)."""
     stats = _drift_stats(spark, sf_dir)
-    rows = [("ks", float(f"{stats['ks']:.6f}")), ("psi", float(f"{stats['psi']:.6f}"))]
-    return spark.createDataFrame(rows, "statistic string, value double")
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "statistic": ["ks", "psi"],
+        "value": [float(f"{stats[k]:.6f}") for k in ("ks", "psi")],
+    }))
 
 
 def q_subword_count_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -128,7 +128,7 @@ class ResumableRun:
                 "output": out_dir,
             }
             if metrics is not None:
-                written = self.spark.read.parquet(out_dir)
+                written = self.spark.read.schema(out.schema).parquet(out_dir)
                 entry["metrics"] = metrics(gdf, written)
             manifest["groups"][str(k)] = entry
             self._publish(manifest)  # atomic per-group commit
@@ -317,7 +317,7 @@ class IncrementalValidator:
             for d in glob.glob(os.path.join(self.run_dir, "upto-*")):
                 if os.path.abspath(d) != os.path.abspath(out_dir):
                     shutil.rmtree(d, ignore_errors=True)
-        written = self.table.spark.read.parquet(out_dir)
+        written = self.table.spark.read.schema(violations.schema).parquet(out_dir)
         entry = {
             "from": last,
             "to": current,

@@ -461,9 +461,10 @@ def embedding_near_duplicates(
 
     Semantics (unchanged since round 2, oracle-pinned): cosine =
     fold-dot(a,b) / (fold-norm(a) * fold-norm(b)) where every fold is a
-    sequential IEEE-double left fold over the array — pairs whose
-    cosine is NULL/NaN (null arrays, null elements, length mismatch,
-    zero norm) never appear.
+    sequential IEEE-double left fold over the array, and the division
+    is ``try_divide``. Pairs whose cosine is NULL (null arrays, null
+    elements, length mismatch, or a zero-norm vector) never appear; a
+    zero-norm vector is a valid input, not a job failure.
 
     Execution (round 6): the exhaustive path used to be a crossJoin with
     per-pair interpreted ``zip_with``/``aggregate`` lambdas (higher-order
@@ -493,7 +494,7 @@ def embedding_near_duplicates(
             norm_expr(F.col(vec_col)).alias("__nb"),
         )
         joined = pairs.join(a, "id_a").join(b, "id_b")
-        cos = dot_expr(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))
+        cos = F.try_divide(dot_expr(F.col("va"), F.col("vb")), F.col("__na") * F.col("__nb"))
         return joined.select("id_a", "id_b", cos.alias("cosine")).filter(
             F.col("cosine") >= threshold
         )
@@ -599,19 +600,12 @@ def _embedding_all_pairs_kernel(
                     e = s + step
                     idmask = ids_a[s:e, None] < ids_b[None, :]
                     denom = norms_a[s:e, None] * norms_b[None, :]
-                    # ANSI parity: the Column expression raises
-                    # DIVIDE_BY_ZERO when a zero-norm vector reaches the
-                    # cosine division (spark.sql.ansi.enabled default)
-                    if np.any(idmask & (denom == 0.0)):
-                        raise ArithmeticError(
-                            "[DIVIDE_BY_ZERO] zero-norm embedding in "
-                            "cosine near-duplicate computation"
-                        )
                     with np.errstate(divide="ignore", invalid="ignore"):
                         cos = _fold_gram(mat_a[s:e], mat_b) / denom
                         # NaN parity: Spark comparisons order NaN above
-                        # every value, so a NaN cosine PASSES >= thr
-                        keep = idmask & ((cos >= thr) | np.isnan(cos))
+                        # every value, so a NaN cosine PASSES >= thr; a
+                        # zero denominator is try_divide's NULL: no pair
+                        keep = idmask & (denom != 0.0) & ((cos >= thr) | np.isnan(cos))
                     ai, bi = np.nonzero(keep)
                     if len(ai):
                         out_a.extend(ids_a[s + ai].tolist())

@@ -47,8 +47,10 @@ def norm_expr(a: Column) -> Column:
 
 def cosine_expr(a: Column, b: Column) -> Column:
     """Cosine similarity of two array columns, computed with
-    zip_with/aggregate higher-order functions (whole-stage codegen)."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+    zip_with/aggregate higher-order functions (whole-stage codegen). A
+    zero-norm side gives NULL (``try_divide``), not an ANSI
+    DIVIDE_BY_ZERO failure of the job."""
+    return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
 
 
 def knn_bruteforce(
@@ -204,7 +206,9 @@ def ivf_assign(
     # n_centroids-way argmax; sim = dot/(row_norm * centroid_norm) keeps
     # the exact operand order of cosine_expr, and the centroid norm is a
     # literal (bit-identical: _fold_norm_py). Lexicographic struct max:
-    # sim first, then -cid (= smallest cid on tie).
+    # sim first, then -cid (= smallest cid on tie). A zero norm makes sim
+    # NULL, which orders lowest: a zero vector lands in the smallest
+    # cid's bucket, where its cosine is NULL again and it forms no pair.
     best = let(
         vec,
         lambda v: let(
@@ -213,7 +217,7 @@ def ivf_assign(
                 F.transform(
                     cent_lit,
                     lambda c: F.struct(
-                        (dot_expr(v, c["vec"]) / (nrm * c["nrm"])).alias("sim"),
+                        F.try_divide(dot_expr(v, c["vec"]), nrm * c["nrm"]).alias("sim"),
                         (-c["cid"]).alias("negcid"),
                         c["cid"].alias("cid"),
                     ),

@@ -238,8 +238,8 @@ class SnapshotTable:
         ``allow_new_columns=True`` permits ADDITIVE schema evolution
         (Iceberg add-column parity): the batch may carry extra columns
         on top of the full current schema; the snapshot records the
-        widened schema and reads merge the chain's footers, surfacing
-        NULL for the new columns on pre-evolution rows. Dropping or
+        widened schema and reads request it, surfacing NULL for the
+        new columns on pre-evolution rows. Dropping or
         retyping columns is rejected, with two Iceberg-parity
         exceptions: a batch column NARROWER than the table's (int into
         a bigint column) is silently upcast at write time — a safe cast
@@ -345,30 +345,25 @@ class SnapshotTable:
         return sids
 
     def _evolved_reader(self, m: dict, sids: list[int]):
-        """Reader configured for the chain's schema history. Uniform
-        chain -> plain reader (footer of any file is authoritative).
-        Evolved chain with recorded schemas -> the TARGET snapshot's
-        recorded schema (``sids[0]``; appends only ever add or widen,
-        so it is the widest in its chain) passed as the explicit
-        requested schema: pre-evolution files surface NULL for added
-        columns and are widening-read for promoted ones (SPARK-40876)
-        — mergeSchema cannot do the latter (int/bigint footers refuse
-        to merge). Legacy chains missing recorded schemas keep the old
-        mergeSchema behavior (additive-only, as before)."""
-        by_id = {s["id"]: s for s in m["snapshots"]}
-        schemas = [by_id[s].get("schema") for s in sids]
-        uniform = (
-            len(sids) == 1
-            or (all(sc is not None for sc in schemas)
-                and all(sc == schemas[0] for sc in schemas))
-        )
-        reader = self.spark.read
-        if not uniform:
-            if schemas[0] is not None:
-                reader = reader.schema(_schema_ddl(schemas[0]))
-            else:
-                reader = reader.option("mergeSchema", "true")
-        return reader
+        """Reader handed the TARGET snapshot's recorded schema
+        (``sids[0]``; appends only ever add or widen, so it is the
+        widest in its chain) as the requested schema. Spark then infers
+        nothing, so building the scan starts no footer-reading job;
+        pre-evolution files surface NULL for added columns and are
+        widening-read for promoted ones (SPARK-40876) — mergeSchema
+        cannot do the latter (int/bigint footers refuse to merge).
+        Legacy snapshots without a recorded schema, and recorded types
+        that do not parse back as DDL (nested field names that need
+        quoting), infer with mergeSchema (additive-only)."""
+        from pyspark.errors import ParseException
+
+        schema = next(s for s in m["snapshots"] if s["id"] == sids[0]).get("schema")
+        if schema is not None:
+            try:
+                return self.spark.read.schema(_schema_ddl(schema))
+            except ParseException:
+                pass
+        return self.spark.read.option("mergeSchema", "true")
 
     def _scan(self, m: dict, sids: list[int]) -> DataFrame:
         """Multi-path scan over the snapshots' dirs; schema evolution

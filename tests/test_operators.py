@@ -365,6 +365,30 @@ def test_ivf_empty_corpus_returns_empty(spark):
     assert res.count() == 0
 
 
+def test_zero_norm_vectors_never_pair_and_never_fail(spark):
+    """A zero-norm vector has a NULL cosine (no ANSI DIVIDE_BY_ZERO):
+    IVF assignment, the candidate-pair join and the exhaustive kernel
+    all succeed, and no output pair holds it."""
+    from oblate_spark.operators.dedup import embedding_near_duplicates
+    from oblate_spark.operators.similarity import cosine_expr, ivf_assign
+
+    vecs = spark.range(50).select(
+        F.col("id"), F.array(*[F.sin(F.col("id") * (k + 1)) for k in range(8)]).alias("vec")
+    )  # row 0 is all zeros
+    assigned, _ = ivf_assign(vecs, id_col="id", vec_col="vec", n_centroids=4)
+    assert len(assigned.collect()) == 50
+    pairs = vecs.select(F.col("id").alias("id_a")).crossJoin(
+        vecs.select(F.col("id").alias("id_b"))
+    ).filter(F.col("id_a") < F.col("id_b"))
+    kw = dict(id_col="id", vec_col="vec", threshold=0.3)
+    joined = {(r.id_a, r.id_b) for r in embedding_near_duplicates(vecs, pairs=pairs, **kw).collect()}
+    exhaustive = {(r.id_a, r.id_b) for r in embedding_near_duplicates(vecs, **kw).collect()}
+    assert joined and joined == exhaustive
+    assert all(0 not in p for p in joined)
+    cos = vecs.select("id", cosine_expr(F.col("vec"), F.col("vec")).alias("c")).collect()
+    assert {r.id for r in cos if r.c is None} == {0}
+
+
 def test_grouped_approx_quantiles(spark):
     """Per-key sketch quantiles track the exact per-group percentile on
     a frame where one key holds 30% of the rows; an all-NULL group is

@@ -7,6 +7,7 @@ silently de-optimizes the plan fails here even if results stay correct.
 from __future__ import annotations
 
 import contextlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -1116,3 +1117,154 @@ def test_compiled_plans_do_not_keep_schema_classes_alive(spark):
     ref = declare_and_validate()
     gc.collect()
     assert ref() is None
+
+
+@pytest.fixture
+def parquet_reads(spark, monkeypatch):
+    """Every ``DataFrameReader.parquet`` call in the test, as (paths,
+    jobs the call itself started, the frame it returned). A read handed
+    its schema starts none; a schema-less read infers it in a job."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        with _spark_jobs(spark) as jobs:
+            df = parquet(self, *paths, **options)
+        reads.append((paths, len(jobs), df))
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    return reads
+
+
+def _inferred(spark, *paths):
+    """The schema Spark infers from the files' footers."""
+    return spark.read.parquet(*paths).schema
+
+
+def test_registry_read_infers_each_table_file_once(spark, sf001_dir, tmp_path, parquet_reads):
+    """``_read`` infers a table file's schema at its first read only;
+    later reads start no job and return the inferred schema. A file
+    rewritten with another schema is inferred again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import _read
+
+    shutil.copy(os.path.join(sf001_dir, "orders.parquet"), tmp_path / "orders.parquet")
+    first = _read(spark, str(tmp_path), "orders")
+    second = _read(spark, str(tmp_path), "orders")
+    assert [jobs for _, jobs, _ in parquet_reads] == [1, 0]
+    assert second.schema == first.schema == _inferred(spark, str(tmp_path / "orders.parquet"))
+    assert second.count() == first.count() > 0
+
+    pq.write_table(pa.table({"k": [1, 2], "tag": ["a", "b"]}), tmp_path / "orders.parquet")
+    del parquet_reads[:]
+    rewritten = _read(spark, str(tmp_path), "orders")
+    again = _read(spark, str(tmp_path), "orders")
+    assert [jobs for _, jobs, _ in parquet_reads] == [1, 0]
+    assert again.schema == rewritten.schema == _inferred(spark, str(tmp_path / "orders.parquet"))
+    assert again.columns == ["k", "tag"] and again.count() == 2
+
+
+#: a row of every column kind a snapshot records as a simpleString
+_NESTED_DDL = (
+    "id bigint, s struct<a:int,b:array<string>>, tags array<int>, "
+    "m map<string,double>, blob binary, amt decimal(12,3), ts timestamp_ntz"
+)
+
+
+def _nested_rows(spark, ids):
+    import datetime
+    import decimal
+
+    return spark.createDataFrame(
+        [
+            (i, (i, [f"x{i}"]), [i, i + 1], {"w": i / 2}, bytes([i]),
+             decimal.Decimal(i) / 8, datetime.datetime(2024, 1, 1, i))
+            for i in ids
+        ],
+        _NESTED_DDL,
+    )
+
+
+def test_snapshot_reads_start_no_inference_job(spark, tmp_path, parquet_reads):
+    """``read``, ``read_incremental`` and ``read_range`` hand Spark the
+    target snapshot's recorded schema, on a uniform chain of nested,
+    binary, decimal and timestamp_ntz columns and on an evolved chain
+    (a widened and an added column). Each returns the schema inference
+    gives for the target snapshot's own files, and its rows."""
+    from oblate_spark.sources.tableio import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path / "nested"))
+    t.write(_nested_rows(spark, range(1, 4)), operation="append")
+    t.append(_nested_rows(spark, range(4, 6)))
+    e = SnapshotTable(spark, str(tmp_path / "evolved"))
+    e.write(spark.createDataFrame([(1, 0.5)], "id int, v float"), operation="append")
+    e.append(spark.createDataFrame([(2, 1.5, "new")], "id bigint, v double, note string"),
+             allow_new_columns=True, allow_type_widening=True)
+    del parquet_reads[:]
+    frames = {
+        "read": (t.read(), t, 2),
+        "read_incremental": (t.read_incremental(from_snapshot=1), t, 2),
+        "read_range": (t.read_range("id", 2, 4), t, 2),
+        "read(1)": (t.read(1), t, 1),
+        "evolved read": (e.read(), e, 2),
+        "evolved read_incremental": (e.read_incremental(from_snapshot=1), e, 2),
+        "evolved read(1)": (e.read(1), e, 1),
+    }
+    assert [jobs for _, jobs, _ in parquet_reads] == [0] * len(frames)
+    for name, (df, table, target) in frames.items():
+        assert df.schema == _inferred(spark, table._snap_dir(target)), name
+    assert [r.id for r in frames["read"][0].orderBy("id").collect()] == [1, 2, 3, 4, 5]
+    assert [r.id for r in frames["read_range"][0].orderBy("id").collect()] == [2, 3, 4]
+    rows = {r.id: r for r in frames["evolved read"][0].collect()}
+    assert (rows[1].v, rows[1].note, rows[2].note) == (0.5, None, "new")
+
+
+def test_checkpoint_rereads_start_no_inference_job(spark, tmp_path, parquet_reads):
+    """``IncrementalValidator.validate_new`` reads its batch and its
+    written violations back with schemas it already holds, and so does
+    ``ResumableRun``'s metrics re-read; each equals inference."""
+    from oblate_spark.checkpoint import IncrementalValidator, ResumableRun
+    from oblate_spark.sources.tableio import SnapshotTable
+
+    class Nested(Schema):
+        id = fields.Integer(validators=[V.Range(0, 4)])
+
+    t = SnapshotTable(spark, str(tmp_path / "nested"))
+    t.write(_nested_rows(spark, range(1, 4)), operation="append")
+    iv = IncrementalValidator(t, Nested, str(tmp_path / "iv"), unique_keys=["id"],
+                              row_id="id", ignore_extra=True)
+    del parquet_reads[:]
+    assert iv.validate_new()["violations"] == 0
+    t.append(_nested_rows(spark, [3, 5]))
+    assert iv.validate_new()["violations"] == 2  # 5 out of range, 3 exists
+    run_dir = str(tmp_path / "run")
+    ResumableRun(spark, t._snap_dir(1), run_dir).run(
+        lambda g: g.select("id", "amt"), metrics=lambda g, out: {"n": out.count()}
+    )
+    # the table read, re-read; the delta, the history, re-read; the
+    # resumable run's metrics re-read (its source read is schema-less)
+    reads = parquet_reads[:5] + [r for r in parquet_reads[5:] if r[0][0].startswith(run_dir)]
+    assert [jobs for _, jobs, _ in reads] == [0] * 6
+    for paths, _, df in reads:
+        assert df.schema == _inferred(spark, *paths), paths
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["psi_extendedprice", "ks_extendedprice", "categorical_psi_events", "drift_extendedprice"],
+)
+def test_driver_scalar_results_are_jvm_plans(spark, sf001_dir, name):
+    """Results the driver already holds come back as JVM rows, not a
+    Python RDD scan (``ExistingRDD``) that starts Python workers."""
+    import __spark_entry__
+
+    df = __spark_entry__.queries()[name](spark, sf001_dir)
+    assert df.collect()
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()

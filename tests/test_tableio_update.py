@@ -588,8 +588,9 @@ def test_incremental_uniqueness_broadcast_guard(spark):
 
 def test_append_additive_schema_evolution(spark, tmp_path):
     """Iceberg add-column parity: an evolved delta widens the table
-    schema; pre-evolution rows read NULL for the added column (merged
-    footers); dropping or retyping columns stays rejected."""
+    schema; pre-evolution rows read NULL for the added column (the
+    recorded schema is requested); dropping or retyping columns stays
+    rejected."""
     t = SnapshotTable(spark, str(tmp_path / "evo"))
     t.write(spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string"))
 
@@ -622,6 +623,18 @@ def test_append_additive_schema_evolution(spark, tmp_path):
             spark.createDataFrame([(5, 1, 0.1)], "id long, name long, quality double"),
             allow_new_columns=True,
         )
+
+
+def test_snapshot_read_infers_when_recorded_types_do_not_parse(spark, tmp_path):
+    """A recorded simpleString does not quote nested field names, so
+    ``struct<a b:int>`` is no DDL: the read infers the schema instead of
+    failing."""
+    t = SnapshotTable(spark, str(tmp_path / "odd"))
+    t.write(spark.sql("SELECT 1L AS id, named_struct('a b', 2) AS s"))
+    t.append(spark.sql("SELECT 3L AS id, named_struct('a b', 4) AS s"))
+    df = t.read()
+    assert df.schema.simpleString() == "struct<id:bigint,s:struct<a b:int>>"
+    assert sorted((r.id, r.s["a b"]) for r in df.collect()) == [(1, 2), (3, 4)]
 
 
 def test_snapshot_compact(spark, tmp_path):
