@@ -483,16 +483,13 @@ def embedding_near_duplicates(
     from .similarity import dot_expr, norm_expr
 
     if pairs is not None:
-        a = df.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("va"),
-            norm_expr(F.col(vec_col)).alias("__na"),
-        )
-        b = df.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vb"),
-            norm_expr(F.col(vec_col)).alias("__nb"),
-        )
+        # a NULL norm (NULL array or element) becomes 0.0, where the
+        # try_divide gives NULL all the same; the non-nullable column
+        # lets the filter inferred from the cosine fold away instead of
+        # evaluating the norm a second time below the projection
+        norm = F.coalesce(norm_expr(F.col(vec_col)), F.lit(0.0))
+        a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), norm.alias("__na"))
+        b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), norm.alias("__nb"))
         joined = pairs.join(a, "id_a").join(b, "id_b")
         cos = F.try_divide(dot_expr(F.col("va"), F.col("vb")), F.col("__na") * F.col("__nb"))
         return joined.select("id_a", "id_b", cos.alias("cosine")).filter(

@@ -67,7 +67,9 @@ def knn_bruteforce(
     The query side is broadcast (queries << corpus in every real
     workload), so the corpus is scanned once with no shuffle; the only
     shuffle is the per-query top-k window. Excludes self-matches when
-    ids collide.
+    ids collide. A zero-norm vector has a NULL cosine (``try_divide``)
+    and never ranks: a zero corpus vector is nobody's neighbour, as in
+    :func:`knn_bruteforce_pandas`, and a zero query gets no neighbours.
     """
     qid = query_id_col or id_col
     # norms folded once per query / corpus row instead of once per
@@ -90,14 +92,24 @@ def knn_bruteforce(
         .select(
             "query_id",
             "neighbor_id",
-            (
-                dot_expr(F.col("qv"), F.col("cv"))
-                / (F.col("__qn") * F.col("__cn"))
+            F.try_divide(
+                dot_expr(F.col("qv"), F.col("cv")), F.col("__qn") * F.col("__cn")
             ).alias("cosine"),
         )
     )
+    return _top_k(scored, k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k by (cosine desc, neighbor_id). A NULL cosine
+    (zero-norm side) sorts last and is dropped after the window: the
+    same rows as dropping it before, but a filter below the window
+    would be pushed to the scans as ``isnotnull(norm)`` and fold each
+    norm twice per row."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        (F.col("rank") <= k) & F.col("cosine").isNotNull()
+    )
 
 
 def _centroids_from_corpus(corpus: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
@@ -256,7 +268,9 @@ def knn_ivf(
     Plan shape: one corpus scan (literal-array argmax assignment — no
     shuffle, no N x C expansion), a broadcast join against the probed
     (query, bucket) pairs, and a final per-query top-k window over the
-    candidate subset only."""
+    candidate subset only. Zero-norm vectors rank as in
+    :func:`knn_bruteforce`: a zero corpus vector never ranks and a zero
+    query gets no neighbours; a zero centroid is probed last."""
     qid = query_id_col or id_col
     # reuse ivf_assign for the corpus-side bucket assignment — one
     # implementation of the literal-array argmax (tie-break, empty-corpus
@@ -282,7 +296,9 @@ def knn_ivf(
     cent_lit = _centroid_array_literal(cent_rows)
 
     # per-query nprobe nearest buckets: sort the same literal array by
-    # (-sim, cid) and slice — no window, no shuffle on the query side
+    # (-sim, cid) and slice — no window, no shuffle on the query side.
+    # A zero norm gives a NULL sim, which struct order would sort FIRST;
+    # +inf sorts it after every real centroid
     qv = F.col("qv")
     # the query vector and its norm are bound once per query row
     # (binding.let) instead of being evaluated once per centroid;
@@ -297,9 +313,10 @@ def knn_ivf(
                     F.transform(
                         cent_lit,
                         lambda c: F.struct(
-                            (-(dot_expr(q, c["vec"]) / (qn * c["nrm"]))).alias(
-                                "negsim"
-                            ),
+                            F.coalesce(
+                                -F.try_divide(dot_expr(q, c["vec"]), qn * c["nrm"]),
+                                F.lit(float("inf")),
+                            ).alias("negsim"),
                             c["cid"].alias("cid"),
                         ),
                     )
@@ -330,14 +347,12 @@ def knn_ivf(
         .select(
             "query_id",
             "neighbor_id",
-            (
-                dot_expr(F.col("qv"), F.col("cv"))
-                / (F.col("__qn") * F.col("__cn"))
+            F.try_divide(
+                dot_expr(F.col("qv"), F.col("cv")), F.col("__qn") * F.col("__cn")
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, k)
 
 
 def ivf_bucket_candidate_pairs(
@@ -489,7 +504,6 @@ def centroid_distance_outliers(
     label_col: str,
     threshold: float,
     scale: int = 1_000_000,
-    max_broadcast_entries: int = 20_000_000,
 ) -> DataFrame:
     """Per-vector squared distance to its OWN class centroid, with an
     outlier flag — the embedding-space label-noise / OOD triage signal:
@@ -512,13 +526,12 @@ def centroid_distance_outliers(
     ``dist`` is the one double sqrt back in input units (display only —
     the flag never consults it).
 
-    Distribution: centroids are (n_labels x dims) rows — broadcast to
-    the second pass while under ``max_broadcast_entries``, else a
-    shuffle join on (label, dim) (labels can be user-ids; same guard
-    pattern as tfidf). Two passes over the exploded vectors (centroid
-    agg + distance agg), both map-side-combining hash aggregates; at
-    100 TB persist the slim (id, label, dim, q) projection between
-    them."""
+    Distribution: centroids are (n_labels x dims) rows, joined to the
+    second pass on (label, dim); AQE broadcasts them from their measured
+    shuffle size, and labels as many as user-ids stay a shuffle join.
+    Two passes over the exploded vectors (centroid agg + distance agg),
+    both map-side-combining hash aggregates; at 100 TB persist the slim
+    (id, label, dim, q) projection between them."""
     cents = label_centroids(
         df, vec_col=vec_col, label_col=label_col, scale=scale
     ).select(
@@ -528,7 +541,6 @@ def centroid_distance_outliers(
         .cast("bigint")
         .alias("c_q"),
     )
-    n_entries = cents.count()  # bounded: one scalar over the slim table
     ex = (
         df.filter(F.col(vec_col).isNotNull())
         .select(
@@ -545,10 +557,7 @@ def centroid_distance_outliers(
             .alias("q"),
         )
     )
-    joined = ex.join(
-        F.broadcast(cents) if n_entries <= max_broadcast_entries else cents,
-        ["label", "dim"],
-    )
+    joined = ex.join(cents, ["label", "dim"])
     d = F.col("q") - F.col("c_q")
     per_vec = joined.groupBy(id_col, "label").agg(
         F.sum(d * d).alias("dist2_q")

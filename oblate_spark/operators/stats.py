@@ -15,8 +15,8 @@ Scale notes (designed for ~100 TB / 1000 executors, tested at sf0.1):
   skew-split covers the join-back.
 * ``referential_violations`` — LEFT ANTI join against the *distinct
   projection* of the parent key (column pruning: only the key column is
-  scanned on the parent). ``broadcast=True`` forces a broadcast of the
-  parent keys (right side for dims that fit); default lets AQE choose.
+  scanned on the parent); AQE broadcasts the parent keys when their
+  measured size is small.
 """
 
 from __future__ import annotations
@@ -170,19 +170,15 @@ def referential_violations(
     fk: str,
     pk: str,
     row_id: Optional[str] = None,
-    broadcast: bool = False,
 ) -> DataFrame:
     """Child rows whose FK has no matching parent PK (dangling
     references), via LEFT ANTI join against the parent's distinct keys.
 
     NULL FKs are not violations (SQL FK semantics). The parent side is
     pruned to its key column before the join so the scan reads one
-    column; ``broadcast=True`` forces a broadcast anti-join for small
-    dims, otherwise AQE picks broadcast vs sort-merge at runtime.
+    column; AQE picks broadcast vs sort-merge at runtime.
     """
     parent_keys = parent.select(F.col(pk).alias(fk)).distinct()
-    if broadcast:
-        parent_keys = F.broadcast(parent_keys)
     dangling = child.filter(F.col(fk).isNotNull()).join(parent_keys, on=fk, how="left_anti")
     if row_id is None:
         return dangling
@@ -288,6 +284,13 @@ def incremental_uniqueness_violations(
     error is absorbed by a 25% safety margin on the threshold; a
     borderline batch at worst falls back to the (always-correct)
     shuffle join.
+
+    This is the package's one explicit broadcast guard; every other
+    join leaves the choice to AQE. Here the runtime choice cannot give
+    the plan: the planner sizes the batch key set by its file bytes,
+    while the gate counts keys, so a backfill batch above 10 MB still
+    broadcasts and the history table is never shuffled. AQE's first
+    round would already shuffle both sides of a sort-merge join.
     """
     parts = [
         multi_key_uniqueness_violations(

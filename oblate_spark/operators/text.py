@@ -282,7 +282,6 @@ def tfidf_top_terms(
     text_col: str,
     k: int = 3,
     idf: str = "log",
-    max_broadcast_terms: int = 20_000_000,
 ) -> DataFrame:
     """Top-k TF-IDF terms per document: (id, term, score, rank) with
     ties broken by term ascending so the ranking is deterministic.
@@ -306,37 +305,32 @@ def tfidf_top_terms(
 
     Plan shape: tokenize+explode (map-side), one groupBy(doc, term) for
     tf, one groupBy(term) for document frequency — joined back onto tf —
-    and a per-doc top-k window. N (the corpus document count) is one
-    bounded scalar job. At 100 TB the df table is the only global state
-    and it is vocabulary-sized: it is broadcast only while its term
-    count stays under ``max_broadcast_terms`` (one column-pruned count
-    on the already-shuffled tf side — negligible); a web-scale
-    vocabulary (billions of distinct tokens) would OOM the driver on an
-    unconditional broadcast, so above the threshold the join falls back
-    to a plain shuffle join and AQE picks the strategy — the same guard
-    pattern as stats.incremental_uniqueness_violations."""
+    and a per-doc top-k window. N (the corpus document count, NULL id
+    included) is a 1-row aggregate cross-joined in, so building the
+    frame starts no job. The df table is vocabulary-sized; AQE
+    broadcasts it from its measured shuffle size when it is small, and
+    a web-scale vocabulary stays a shuffle join."""
     if idf not in ("log", "rational"):
         raise ValueError(f"idf must be 'log' or 'rational', got {idf!r}")
-    n_docs = df.select(id_col).distinct().count()  # bounded: one scalar
+    n_docs = df.select(id_col).distinct().agg(F.count(F.lit(1)).alias("__n"))
     toks = df.select(
         F.col(id_col).alias("doc"),
         F.explode(tokens_expr(F.col(text_col))).alias("term"),
     )
     tf = toks.groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_terms = dfreq.count()  # bounded: one scalar over the slim df table
-    joined = tf.join(
-        F.broadcast(dfreq) if n_terms <= max_broadcast_terms else dfreq,
-        "term",
-    )
+    # every tf term has its df row, so the left join is the inner join;
+    # it only leaves AQE one build side to pick, the vocabulary (as an
+    # inner join it would broadcast tf whenever tf's stage finishes first)
+    joined = tf.join(dfreq, "term", "left").crossJoin(F.broadcast(n_docs))
     if idf == "log":
         score = F.round(
-            F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6
+            F.col("tf") * F.log(F.col("__n").cast("double") / F.col("df")), 6
         )
     else:
         # exact integer half-up rounding of tf*N*1e6/df, then /1e6 —
         # every step correctly rounded, bit-identical across engines
-        num = F.col("tf") * F.lit(int(n_docs)) * F.lit(2_000_000) + F.col("df")
+        num = F.col("tf") * F.col("__n") * F.lit(2_000_000) + F.col("df")
         score = (
             F.floor(num / (F.col("df") * 2)).cast("double") / F.lit(1e6)
         )
@@ -458,13 +452,11 @@ def dup_shingle_fraction(
     for documents shorter than ``n`` tokens (dup_fraction 0.0).
 
     Distribution: shingles are md5-hashed BEFORE the shuffle (16-byte
-    fixed width regardless of ``n``); per-doc distinct and global
-    document-frequency are hash aggregates on that key with map-side
-    partials, and the doc-frequency table joins back on the same key —
-    a vocabulary-sized shuffle join, never broadcast (a web-scale
-    vocabulary exceeds any broadcast limit; same lesson as
-    ``tfidf_top_terms``'s guarded broadcast). The ratio is one exact
-    BIGINT/BIGINT double division, so a SQL oracle is bit-identical.
+    fixed width regardless of ``n``); the global document frequency is
+    a count() window over that key's shuffle and the per-doc counts one
+    hash aggregate — no vocabulary-sized table is joined back or
+    broadcast. The ratio is one exact BIGINT/BIGINT double division, so
+    a SQL oracle is bit-identical.
     """
     from pyspark.sql import Window
 
@@ -510,7 +502,6 @@ def token_rarity(
     id_col: str,
     text_col: str,
     rare_doc_threshold: int = 2,
-    max_broadcast_terms: int = 20_000_000,
 ) -> DataFrame:
     """Per-document corpus-rarity profile: how unusual is each
     document's vocabulary relative to the whole corpus? The standard
@@ -534,14 +525,13 @@ def token_rarity(
     Distribution: explode distinct tokens (map-side), one
     groupBy(token) hash aggregate for the document-frequency table
     (map-side partials), then a token-keyed join back. The df table is
-    vocabulary-sized: broadcast only while its term count stays under
-    ``max_broadcast_terms`` (same guard as ``tfidf_top_terms``); above
-    it, a plain shuffle join — where stopword-like tokens carry
-    near-corpus-cardinality join groups, which AQE's skew-join split
-    handles (they're the df-max tokens, so they never affect ``min_df``
-    semantics, only balance). Final per-doc aggregate is one more hash
-    aggregate. Nothing all-pairs, nothing driver-side beyond the one
-    bounded vocabulary count."""
+    vocabulary-sized; AQE broadcasts it from its measured shuffle size
+    when it is small. A web-scale vocabulary stays a shuffle join,
+    where stopword-like tokens carry near-corpus-cardinality join
+    groups that AQE's skew-join split handles (they're the df-max
+    tokens, so they never affect ``min_df`` semantics, only balance).
+    Final per-doc aggregate is one more hash aggregate. Nothing
+    all-pairs, nothing driver-side."""
     toks = df.select(
         F.col(id_col),
         F.explode(F.array_distinct(tokens_expr(F.col(text_col)))).alias(
@@ -549,11 +539,7 @@ def token_rarity(
         ),
     )
     dfreq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    n_terms = dfreq.count()  # bounded: one scalar over the slim df table
-    joined = toks.join(
-        F.broadcast(dfreq) if n_terms <= max_broadcast_terms else dfreq,
-        "__tok",
-    )
+    joined = toks.join(dfreq, "__tok")
     per_doc = joined.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_distinct_tokens"),
         F.min("__df").alias("min_df"),
@@ -655,7 +641,6 @@ def strip_boilerplate(
     line_col: str,
     min_docs: int = 2,
     joiner: str = " ",
-    max_broadcast_lines: int = 5_000_000,
 ) -> DataFrame:
     """Rebuild each document with its group's boilerplate lines removed
     (CCNet-style line-level dedup): (doc, clean_text, n_lines,
@@ -665,15 +650,13 @@ def strip_boilerplate(
 
     Plan: the boilerplate set from :func:`boilerplate_lines` (slim:
     (group, line) pairs that actually repeat) is joined back onto the
-    lines. It is broadcast while its row count stays under
-    ``max_broadcast_lines`` — the usual case, boilerplate is a tiny
-    fraction of a corpus — else a plain shuffle join under AQE (same
-    guard pattern as stats.incremental_uniqueness_violations; an
-    unconditional broadcast of a 100 TB crawl's banner set could OOM
-    the driver). Reassembly is one groupBy(doc): collect kept
-    (idx, line) structs, array_sort (idx is unique per doc, so the sort
-    is total and deterministic), join with ``joiner``. Per-doc state is
-    bounded by document size, not corpus size."""
+    lines. AQE broadcasts it from its measured shuffle size — the usual
+    case, boilerplate is a tiny fraction of a corpus — and keeps a
+    crawl-sized banner set a shuffle join. Reassembly is one
+    groupBy(doc): collect kept (idx, line) structs, array_sort (idx is
+    unique per doc, so the sort is total and deterministic), join with
+    ``joiner``. Per-doc state is bounded by document size, not corpus
+    size."""
     bp = boilerplate_lines(
         lines,
         doc_col=doc_col,
@@ -681,14 +664,12 @@ def strip_boilerplate(
         line_col=line_col,
         min_docs=min_docs,
     ).select("group", "line", F.lit(True).alias("__bp"))
-    n_bp = bp.count()  # bounded: slim repeated-lines frame, one job
-    right = F.broadcast(bp) if n_bp <= int(max_broadcast_lines) else bp
     flagged = lines.select(
         F.col(doc_col).alias("doc"),
         F.col(group_col).alias("group"),
         F.col(idx_col).alias("idx"),
         F.col(line_col).alias("line"),
-    ).join(right, ["group", "line"], "left")
+    ).join(bp, ["group", "line"], "left")
     kept_struct = F.when(
         F.col("__bp").isNull(), F.struct(F.col("idx"), F.col("line"))
     )

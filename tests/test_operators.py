@@ -367,10 +367,13 @@ def test_ivf_empty_corpus_returns_empty(spark):
 
 def test_zero_norm_vectors_never_pair_and_never_fail(spark):
     """A zero-norm vector has a NULL cosine (no ANSI DIVIDE_BY_ZERO):
-    IVF assignment, the candidate-pair join and the exhaustive kernel
-    all succeed, and no output pair holds it."""
+    IVF assignment, the candidate-pair join, the exhaustive kernel and
+    both kNN searches all succeed, and no output pair holds it. A zero
+    query gets no neighbours."""
     from oblate_spark.operators.dedup import embedding_near_duplicates
-    from oblate_spark.operators.similarity import cosine_expr, ivf_assign
+    from oblate_spark.operators.similarity import (
+        cosine_expr, ivf_assign, knn_bruteforce, knn_ivf,
+    )
 
     vecs = spark.range(50).select(
         F.col("id"), F.array(*[F.sin(F.col("id") * (k + 1)) for k in range(8)]).alias("vec")
@@ -387,6 +390,14 @@ def test_zero_norm_vectors_never_pair_and_never_fail(spark):
     assert all(0 not in p for p in joined)
     cos = vecs.select("id", cosine_expr(F.col("vec"), F.col("vec")).alias("c")).collect()
     assert {r.id for r in cos if r.c is None} == {0}
+    queries = vecs.filter(F.col("id") < 3)
+    knn_kw = dict(id_col="id", vec_col="vec", k=3)
+    brute = knn_bruteforce(vecs, queries, **knn_kw).collect()
+    ivf = knn_ivf(vecs, queries, n_centroids=4, nprobe=4, **knn_kw).collect()
+    for res in (brute, ivf):
+        assert {r.query_id for r in res} == {1, 2}
+        assert all(r.neighbor_id != 0 and r.cosine is not None for r in res)
+        assert sorted(r.rank for r in res) == [1, 1, 2, 2, 3, 3]
 
 
 def test_grouped_approx_quantiles(spark):
@@ -1747,30 +1758,26 @@ def test_strip_boilerplate(spark):
     assert out[3]["n_removed"] == 0 and out[3]["n_lines"] == 2
 
 
-def test_strip_boilerplate_all_removed_and_shuffle_fallback(spark):
+def test_strip_boilerplate_all_removed_lazy_broadcast(spark):
     """A doc whose every line is boilerplate yields an empty clean_text
-    (not null); max_broadcast_lines=0 forces the shuffle-join path and
-    produces identical results."""
+    (not null). Building the strip starts no job; run, the boilerplate
+    set is the broadcast side of the join back."""
     from oblate_spark.operators.text import strip_boilerplate
+
+    from .test_plan_quality import _spark_jobs, broadcasts_right, final_plan
 
     lines = spark.createDataFrame(
         [(1, "g", 0, "x"), (2, "g", 0, "x")],
         "doc long, grp string, idx int, line string",
     )
-    for cap in (10, 0):
-        out = {
-            r["doc"]: r
-            for r in strip_boilerplate(
-                lines,
-                doc_col="doc",
-                group_col="grp",
-                idx_col="idx",
-                line_col="line",
-                min_docs=2,
-                max_broadcast_lines=cap,
-            ).collect()
-        }
-        assert out[1]["clean_text"] == "" and out[1]["n_removed"] == 1
+    with _spark_jobs(spark) as jobs:
+        df = strip_boilerplate(
+            lines, doc_col="doc", group_col="grp", idx_col="idx", line_col="line", min_docs=2
+        )
+    assert not jobs, jobs
+    out = {r["doc"]: r for r in df.collect()}
+    assert out[1]["clean_text"] == "" and out[1]["n_removed"] == 1
+    assert broadcasts_right(final_plan(df), "group", "line")
 
 
 def test_frequent_values_profile(spark):

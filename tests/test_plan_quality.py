@@ -77,14 +77,34 @@ def test_payload_kernel_projects_only_needed_columns(spark, images_path):
     assert scan and all("extra" not in l for l in scan), scan
 
 
-def test_referential_join_broadcasts_when_forced(spark, images_path):
+def final_plan(df) -> str:
+    """The final adaptive plan of a collected frame: the executed plan's
+    text before ``== Initial Plan ==``."""
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def broadcasts_right(plan: str, *keys: str) -> bool:
+    """Whether ``plan`` has a BroadcastHashJoin that broadcasts its
+    right side, joined on exactly ``keys`` there."""
+    import re
+
+    ks = ", ".join(rf"{k}#\d+L?" for k in keys)
+    return re.search(rf"BroadcastHashJoin \[[^\]]*\], \[{ks}\], \w+, BuildRight", plan) is not None
+
+
+def test_referential_join_broadcasts_at_runtime(spark):
+    """Building the anti-join starts no job; run, the parent keys are
+    the broadcast side."""
     from oblate_spark.operators.stats import referential_violations
 
     child = spark.range(0, 1000).select(F.col("id").alias("fk"))
     parent = spark.range(0, 100).select(F.col("id").alias("pk"))
-    out = referential_violations(child, parent, fk="fk", pk="pk", broadcast=True)
-    plan = plan_of(out)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
+    with _spark_jobs(spark) as jobs:
+        out = referential_violations(child, parent, fk="fk", pk="pk")
+    assert not jobs, jobs
+    assert len(out.collect()) == 900
+    plan = final_plan(out)
+    assert broadcasts_right(plan, "fk"), plan
 
 
 def test_knn_broadcasts_queries(spark):
@@ -285,35 +305,29 @@ def test_tfidf_broadcasts_idf_and_partitions_window(spark, images_path):
     src = spark.read.parquet(images_path).select(
         F.col("image_id").alias("doc_id"), F.col("caption").alias("text")
     )
-    plan = plan_of(tfidf_top_terms(src, id_col="doc_id", text_col="text", k=2))
-    assert "EvalPython" not in plan
-    assert "BroadcastExchange" in plan, plan[:2000]
-    assert "Window" in plan and "hashpartitioning(doc" in plan, plan[:3000]
+    out = tfidf_top_terms(src, id_col="doc_id", text_col="text", k=2)
+    assert "EvalPython" not in plan_of(out)
+    assert out.collect()
+    plan = final_plan(out)
+    assert broadcasts_right(plan, "term"), plan
+    assert "Window" in plan and "hashpartitioning(doc" in plan, plan
 
 
-def test_tfidf_vocab_guard_falls_back_to_shuffle_join(spark, images_path):
-    """Above ``max_broadcast_terms`` the document-frequency join must
-    NOT broadcast — a web-scale vocabulary (billions of terms) would
-    OOM the driver; the guard trades the broadcast for a shuffle join.
-    Auto-broadcast is disabled so the assertion sees the explicit
-    decision, not Spark's size-based one."""
+def test_tfidf_build_starts_no_job(spark, images_path):
+    """N (the document count) is a 1-row aggregate cross-joined in and
+    the document-frequency join is left to AQE, so building the frame
+    starts no job; run, the document-frequency side is broadcast."""
     from oblate_spark.operators.text import tfidf_top_terms
 
     src = spark.read.parquet(images_path).select(
         F.col("image_id").alias("doc_id"), F.col("caption").alias("text")
     )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = tfidf_top_terms(
-            src, id_col="doc_id", text_col="text", k=2, max_broadcast_terms=1
-        )
-        plan = plan_of(out)
-        assert "BroadcastExchange" not in plan, plan[:2000]
-        assert "Join" in plan, plan[:2000]  # shuffle join took over
-        assert out.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    with _spark_jobs(spark) as jobs:
+        out = tfidf_top_terms(src, id_col="doc_id", text_col="text", k=2)
+    assert not jobs, jobs
+    assert out.collect()
+    plan = final_plan(out)
+    assert broadcasts_right(plan, "term"), plan
 
 
 def test_tfidf_rational_idf_matches_log_ranking_shape(spark, images_path):
@@ -324,12 +338,12 @@ def test_tfidf_rational_idf_matches_log_ranking_shape(spark, images_path):
     src = spark.read.parquet(images_path).select(
         F.col("image_id").alias("doc_id"), F.col("caption").alias("text")
     )
-    plan = plan_of(
-        tfidf_top_terms(src, id_col="doc_id", text_col="text", k=2, idf="rational")
-    )
-    assert "EvalPython" not in plan
-    assert "BroadcastExchange" in plan, plan[:2000]
-    assert "Window" in plan and "hashpartitioning(doc" in plan, plan[:3000]
+    out = tfidf_top_terms(src, id_col="doc_id", text_col="text", k=2, idf="rational")
+    assert "EvalPython" not in plan_of(out)
+    assert out.collect()
+    plan = final_plan(out)
+    assert broadcasts_right(plan, "term"), plan
+    assert "Window" in plan and "hashpartitioning(doc" in plan, plan
 
 
 def test_replay_sessions_single_shuffle_single_pandas_stage(spark):
@@ -655,22 +669,23 @@ def test_type_inference_single_pass_no_expand(spark, tmp_path):
     assert "EvalPython" not in plan
 
 
-def test_strip_boilerplate_broadcast_guard(spark):
-    """Under the cap the boilerplate join-back broadcasts; above it
-    (cap=0) the plan must contain NO BroadcastExchange for that join —
-    the driver-OOM guard for web-scale banner sets."""
+def test_strip_boilerplate_broadcasts_at_runtime(spark):
+    """Building the strip starts no job; run, the boilerplate set is
+    the broadcast side of the join back onto the lines."""
     from oblate_spark.operators.text import strip_boilerplate
 
-    lines = spark.createDataFrame(
-        [(i, "g", 0, "x") for i in range(4)],
-        "doc long, grp string, idx int, line string",
+    lines = spark.range(40).select(
+        (F.col("id") % 8).alias("doc"), (F.col("id") % 2).cast("string").alias("grp"),
+        (F.col("id") / 8).cast("int").alias("idx"),
+        F.when(F.col("id") < 8, F.lit("banner")).otherwise(F.col("id").cast("string")).alias("line"),
     )
-    kw = dict(doc_col="doc", group_col="grp", idx_col="idx",
-              line_col="line", min_docs=2)
-    broad = plan_of(strip_boilerplate(lines, max_broadcast_lines=10, **kw))
-    assert "BroadcastExchange" in broad, broad[:2000]
-    fallback = plan_of(strip_boilerplate(lines, max_broadcast_lines=0, **kw))
-    assert "BroadcastExchange" not in fallback, fallback[:2000]
+    with _spark_jobs(spark) as jobs:
+        out = strip_boilerplate(lines, doc_col="doc", group_col="grp", idx_col="idx",
+                                line_col="line", min_docs=2)
+    assert not jobs, jobs
+    assert {r.n_removed for r in out.collect()} == {1}
+    plan = final_plan(out)
+    assert broadcasts_right(plan, "group", "line"), plan
 
 
 def test_signature_bit_profile_single_aggregate_no_expand(spark):
@@ -834,15 +849,21 @@ def _unbound(tree, scope):
 @pytest.fixture(scope="module")
 def registry_builds(spark, sf001_dir):
     """Every registered query built at sf0.001, with the frames each
-    build passed to ``localCheckpoint`` and the names of the functions
-    that called it: ``{name: (frame, checkpointed frames)}``, callers."""
+    build passed to ``localCheckpoint``, the names of the functions that
+    called it and the queries whose build started a Spark job:
+    ``{name: (frame, checkpointed frames)}``, callers, job starters.
+    Every table is read once first, so its one schema-inference job
+    does not land on whichever query reads it first."""
     import sys
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     import __spark_entry__ as entrymod
 
-    checkpointed, callers = [], set()
+    for table in sorted(os.listdir(sf001_dir)):
+        if table.endswith(".parquet"):
+            entrymod._read(spark, sf001_dir, table[: -len(".parquet")])
+    checkpointed, callers, started = [], set(), set()
     real = ClassicDataFrame.localCheckpoint
 
     def recording(self, *args, **kwargs):
@@ -855,8 +876,12 @@ def registry_builds(spark, sf001_dir):
         mp.setattr(ClassicDataFrame, "localCheckpoint", recording)
         for name, build in entrymod.queries().items():
             checkpointed.clear()
-            builds[name] = (build(spark, sf001_dir), list(checkpointed))
-    return builds, callers
+            with _spark_jobs(spark) as jobs:
+                df = build(spark, sf001_dir)
+            builds[name] = (df, list(checkpointed))
+            if jobs:
+                started.add(name)
+    return builds, callers, started
 
 
 def test_lambda_bodies_bind_outer_expressions(registry_builds):
@@ -891,6 +916,46 @@ def test_only_iterative_and_exact_passes_cut_lineage(registry_builds):
     assert registry_builds[1] == {
         "duplicate_clusters", "iqr_outlier_profile", "mad_outlier_profile",
     }
+
+
+def test_only_listed_queries_start_jobs_at_build(registry_builds):
+    """Building a query plans it; the caller's collect runs it. A build
+    may start a job only where the plan needs data first. Choosing a
+    join strategy is not such a case: AQE picks broadcast or shuffle
+    from the measured stage size, so a count that only picks a hint
+    runs the small side twice."""
+    assert registry_builds[2] == {
+        # bounded driver collects the plan is built from
+        "aspect_bucket_batches", "mixture_sample_documents",
+        "suggest_constraints_orders", "embedding_near_dup_ivf", "ivf_knn",
+        # driver-side statistics (histograms, quantiles)
+        "categorical_psi_events", "drift_extendedprice", "ks_extendedprice",
+        "psi_extendedprice", "windowed_psi_events",
+        # exhaustive twins: the small side goes to an Arrow kernel
+        "embedding_near_dup", "jaccard_pairs_documents",
+        # iterative or lineage-cutting passes
+        "dup_clusters_documents", "keep_best_canonical_documents",
+        "phash_dup_clusters", "iqr_outliers_lineitem", "mad_outliers_lineitem",
+        # snapshot writes and stream replays before the read
+        "compact_roundtrip_orders", "schema_evolution_orders", "skip_scan_orders",
+        "dedup_stream_replay", "sessionization_stream_replay",
+    }
+
+
+@pytest.mark.parametrize("name, keys", [
+    ("tfidf_top_terms_documents", ["term"]),
+    ("token_rarity_documents", ["__tok"]),
+    ("strip_boilerplate_documents", ["group", "line"]),
+    ("centroid_outliers_embeddings", ["label", "dim"]),
+    ("referential_lineitem_orders", ["l_orderkey"]),
+])
+def test_small_join_sides_broadcast_at_runtime(registry_builds, name, keys):
+    """With no hint and no count, AQE still broadcasts the small side
+    (vocabulary, boilerplate set, centroids, parent keys)."""
+    df = registry_builds[0][name][0]
+    df.collect()
+    plan = final_plan(df)
+    assert broadcasts_right(plan, *keys), plan
 
 
 @contextlib.contextmanager
@@ -957,6 +1022,21 @@ def test_candidate_self_joins_reuse_one_exchange(spark, near_dup_inputs):
         assert df.collect(), name
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ReusedExchange" in plan and "ExistingRDD" not in plan, (name, plan)
+
+
+def test_candidate_pair_cosine_folds_each_norm_once(spark, near_dup_inputs):
+    """``embedding_near_duplicates(pairs=)`` folds each side's norm once
+    per row: a nullable norm column would get an inferred
+    ``isnotnull(norm)`` filter pushed below its projection, folding the
+    norm a second time."""
+    from oblate_spark.operators.dedup import embedding_near_duplicates
+
+    _, vecs = near_dup_inputs
+    ids = vecs.select("vid")
+    pairs = ids.toDF("id_a").crossJoin(ids.toDF("id_b")).filter(F.col("id_a") < F.col("id_b"))
+    out = embedding_near_duplicates(vecs, id_col="vid", vec_col="vec", threshold=0.99, pairs=pairs)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("SQRT(aggregate") == 2, plan
 
 
 def test_image_report_cached_only_for_two_branches(spark, images_path):
