@@ -188,7 +188,6 @@ class IncrementalValidator:
         job: Optional[Callable[[DataFrame], DataFrame]] = None,
         unique_keys: Optional[list] = None,
         row_id: Optional[str] = None,
-        cleanup: Optional[Callable[[DataFrame], None]] = None,
         **validate_kw,
     ) -> None:
         if (schema_cls is None) == (job is None):
@@ -201,7 +200,6 @@ class IncrementalValidator:
         self.run_dir = run_dir
         self.unique_keys = list(unique_keys or [])
         self.row_id = row_id
-        self.cleanup = cleanup
         self.validate_kw = validate_kw
         if self.unique_keys and not row_id:
             raise ValueError("unique_keys requires row_id")
@@ -270,13 +268,11 @@ class IncrementalValidator:
                 rebase = True
                 last = None  # uniqueness: treat as first run below
         if self.job is not None:
-            raw_out = self.job(batch)
-            violations = raw_out
+            violations = self.job(batch)
         else:
-            res = self.schema_cls.validate(
+            violations = self.schema_cls.validate(
                 batch, row_id=self.row_id, **self.validate_kw
-            )
-            raw_out = violations = res.violations
+            ).violations
         if self.unique_keys:
             from .operators.stats import (
                 incremental_uniqueness_violations,
@@ -327,13 +323,6 @@ class IncrementalValidator:
         }
         if rebase:
             entry["rebase"] = True  # chain was cut; this was a full revalidation
-        if self.cleanup is not None:
-            # e.g. images.release_report: without it a long-lived driver
-            # accumulates one cached payload report per ingest batch.
-            # Receives the RAW job output — the uniqueness union above
-            # is a new DataFrame that would not carry the job's cache
-            # handle attribute.
-            self.cleanup(raw_out)
         tmp = self._state_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"last_validated": current, **{k: v for k, v in entry.items() if k != "output"}}, f)
@@ -363,18 +352,12 @@ def incremental_validate_images(
         return validate_image_table(batch, phash_tolerance=phash_tolerance,
                                     check_unique=False)
 
-    from .operators.images import release_report
-
     return IncrementalValidator(
         table,
         run_dir=run_dir,
         job=job,
         unique_keys=["image_id", "phash"],
         row_id="image_id",
-        # unpersist the per-batch payload report after its violations
-        # are written — a long-lived ingest loop would otherwise pin one
-        # cached report per batch in executor storage memory
-        cleanup=release_report,
     )
 
 

@@ -30,7 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import ErrorCode
-from .fields import Field, Object, json_inner_string, json_token_type, json_trimmed
+from .fields import (
+    Field, Object, StagedToken, json_inner_string, json_token_type, json_value_repr,
+)
 
 __all__ = ["CHECK_DDL", "CompiledPlan", "SchemaCompileError", "compile_plan", "reads_run_state"]
 
@@ -70,8 +72,8 @@ class CompiledPlan:
     loaded: dict = dc_field(default_factory=dict)
     #: compile-time (schema-level) violations, emitted as constant rows
     schema_violations: list = dc_field(default_factory=list)
-    #: helper-column layers (staged mode: shared token-classification
-    #: subtrees), projected in ORDER before the check expressions and
+    #: helper-column layers (staged mode: each field's StagedToken
+    #: views), projected in ORDER before the check expressions and
     #: dropped afterwards — later layers reference earlier ones (trim ->
     #: token type / inner string -> value repr), so each layer is its
     #: own projection
@@ -79,6 +81,28 @@ class CompiledPlan:
 
     def prelude_columns(self) -> list:
         return [name for layer in self.prelude for name in layer]
+
+    def with_helpers(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the helper columns that the check and loaded-value
+        expressions reference, one projection per layer. The projections
+        survive CollapseProject because the helpers are non-cheap and
+        multiply referenced."""
+        for layer in self.prelude:
+            df = df.withColumns(layer)
+        return df
+
+    def staged_token(self, src: Column, key: str) -> StagedToken:
+        """Add ``key``'s token views to the helper layers and return
+        references to them."""
+        while len(self.prelude) < 3:
+            self.prelude.append({})
+        names = (f"__sp_tr__{key}", f"__sp_jt__{key}", f"__sp_in__{key}", f"__sp_vr__{key}")
+        trim, jt, inner, repr_ = (F.col(n) for n in names)
+        self.prelude[0][names[0]] = F.trim(src)
+        self.prelude[1][names[1]] = json_token_type(trim)
+        self.prelude[1][names[2]] = json_inner_string(trim)
+        self.prelude[2][names[3]] = json_value_repr(trim, jt, inner)
+        return StagedToken(src=src, trim=trim, jt=jt, inner=inner, repr=repr_)
 
     def violations_column(self) -> Column:
         if not self.check_arrays:
@@ -248,62 +272,18 @@ def _compile_field(
     fld: Field,
     src: Column,
     key: str,
-    staged: bool,
     src_dtype: Optional[T.DataType],
-    prelude: Optional[dict] = None,
+    tok: Optional[StagedToken] = None,
 ) -> tuple[Column, Column]:
-    """Returns (checks_array, loaded_value) for one field.
-
-    In staged mode with a ``prelude`` dict, the shared JSON token
-    classification subtrees (trim / token type / inner string / value
-    repr) are emitted ONCE as helper columns into ``prelude`` and every
-    consumer references them by name — without this each tree was
-    copied into every check and the compiled method outgrew the JVM's
-    JIT limit (see fields._STAGED_HELPERS)."""
-    from . import fields as _fields
-
-    if staged and prelude is not None:
-        while len(prelude) < 3:
-            prelude.append({})
-        names = {
-            "trim": f"__sp_tr__{key}",
-            "jt": f"__sp_jt__{key}",
-            "inner": f"__sp_in__{key}",
-            "repr": f"__sp_vr__{key}",
-        }
-        # build each helper with the previously registered ones active,
-        # so later LAYERS (token type, then value repr) reference
-        # earlier ones by column name
-        token = {}
-        try:
-            _fields._STAGED_HELPERS = token
-            prelude[0][names["trim"]] = F.trim(src)
-            token["trim"] = names["trim"]
-            prelude[1][names["jt"]] = _fields.json_token_type(src)
-            prelude[1][names["inner"]] = _fields.json_inner_string(src)
-            token["jt"] = names["jt"]
-            token["inner"] = names["inner"]
-            prelude[2][names["repr"]] = _fields.json_value_repr(src)
-            token["repr"] = names["repr"]
-            return _compile_field_body(fld, src, key, staged, src_dtype)
-        finally:
-            _fields._STAGED_HELPERS = None
-    return _compile_field_body(fld, src, key, staged, src_dtype)
-
-
-def _compile_field_body(
-    fld: Field,
-    src: Column,
-    key: str,
-    staged: bool,
-    src_dtype: Optional[T.DataType],
-) -> tuple[Column, Column]:
-    value_repr = fld.value_repr(src, staged)
+    """Returns (checks_array, loaded_value) for one field. ``tok`` is the
+    field's staged token (``CompiledPlan.staged_token``); None in typed
+    mode."""
+    value_repr = fld.value_repr(src, tok)
 
     # --- type kernel -------------------------------------------------------
     kernel_checks: Optional[Column] = None
-    if staged:
-        sl = fld.staged_load(src)
+    if tok is not None:
+        sl = fld.staged_load(tok)
         loaded = sl.loaded
         terr = _rewrite_error_struct(fld, sl.type_error, value_repr)
         type_structs = [
@@ -333,8 +313,7 @@ def _compile_field_body(
             )
         # raw validators see the pre-cast value; best relational view of
         # "the raw value" is the JSON payload for strings, token otherwise
-        jt = json_token_type(src)
-        raw_view = F.when(jt == "string", json_inner_string(src)).otherwise(json_trimmed(src))
+        raw_view = F.when(tok.jt == "string", tok.inner).otherwise(tok.trim)
     else:
         if src_dtype is not None and not fld.accepts_spark_type(src_dtype):
             target = fld.spark_type()
@@ -489,7 +468,7 @@ def _compile_object_children(
         ckey = f"{key_prefix}.{child.load_key}"
         csrc = src.getField(child.load_key)
         cdt = _resolve_struct_type(src_dtype, child.load_key) if src_dtype is not None else None
-        checks, _ = _compile_field(child, csrc, ckey, staged=False, src_dtype=cdt)
+        checks, _ = _compile_field(child, csrc, ckey, cdt)
         if isinstance(child, Object):
             out.extend(
                 F.when(src.isNotNull() & csrc.isNotNull(), c).otherwise(_empty_checks())
@@ -559,10 +538,8 @@ def compile_plan(
             continue
 
         src = F.col(key)
-        checks, loaded = _compile_field(
-            fld, src, key, staged, dtypes.get(key),
-            prelude=plan.prelude if staged else None,
-        )
+        tok = plan.staged_token(src, key) if staged else None
+        checks, loaded = _compile_field(fld, src, key, dtypes.get(key), tok)
         plan.check_arrays.append(checks)
         plan.loaded[key] = loaded
 

@@ -165,9 +165,7 @@ class ValidationResult:
             if default is not _MISSING_SENTINEL:
                 return default
             raise FieldNotSet(fld, cls, field_name)
-        base = self.annotated
-        for layer in self.plan.prelude:  # loaded exprs may reference helpers
-            base = base.withColumns(layer)
+        base = self.plan.with_helpers(self.annotated)  # loaded exprs may reference helpers
         rows = (
             base.filter(F.col("_row_id") == str(row_id))
             .select(self.plan.loaded[key].alias("v"))
@@ -202,9 +200,7 @@ class ValidationResult:
         ids = [str(r) for r in row_ids]
         if not ids:
             return {}
-        base = self.annotated
-        for layer in self.plan.prelude:  # loaded exprs may reference helpers
-            base = base.withColumns(layer)
+        base = self.plan.with_helpers(self.annotated)  # loaded exprs may reference helpers
         rows = (
             base.filter(F.col("_row_id").isin(ids))
             .select(F.col("_row_id").alias("k"), self.plan.loaded[key].alias("v"))
@@ -339,15 +335,8 @@ def validate(
     finally:
         _reset_current(token)
     ctx._initialized = True
-    base = df
-    for layer in plan.prelude:
-        # shared staged-mode subtrees (token classification etc.) are
-        # projected once per layer; every check references them by name.
-        # The projections survive CollapseProject because the helpers
-        # are non-cheap and multiply referenced; they are dropped from
-        # the visible annotated frame below.
-        base = base.withColumns(layer)
-    annotated = base.withColumns(
+    # staged-mode helper columns are dropped from the visible frame below
+    annotated = plan.with_helpers(df).withColumns(
         {
             "_row_id": _resolve_row_id(df, row_id),
             "_violations": violations_col,

@@ -17,7 +17,10 @@ Two ingestion modes per plan:
   (semi-structured ingest). The strict/non-strict cast kernel of the
   reference (oblate/fields/primitive.py:65-77,113-130,198-218,254-271)
   is reproduced with JSON-token classification + ``try_cast`` — still
-  zero per-row Python for every primitive field.
+  zero per-row Python for every primitive field. The compiler projects
+  each field's token views once as helper columns and hands the field a
+  :class:`StagedToken` of references to them; ``staged_load`` and
+  ``value_repr`` read only that token, never shared module state.
 """
 
 from __future__ import annotations
@@ -52,8 +55,10 @@ __all__ = [
     "Union",
     "TypeExpr",
     "Object",
+    "StagedToken",
     "json_token_type",
     "json_inner_string",
+    "json_value_repr",
 ]
 
 
@@ -84,32 +89,26 @@ MISSING = _MissingType()
 _INT_RE = r"^-?\d+$"
 _FLOAT_RE = r"^-?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?$"
 
-#: Active staged-compile helper registry (compiler.py sets it around one
-#: field's staged compile): maps 'jt'/'inner'/'repr' to the name of a
-#: pre-projected helper column. When set, the classification builders
-#: below return a cheap column REFERENCE instead of re-instantiating
-#: the regex-laden CASE tree — the tree used to be copied into every
-#: consumer (loaded value, type error, raw view, every check's
-#: value_repr), which made the compiled method too large to JIT
-#: (round 6; the staged kernel ran 2.7x slower as interpreted
-#: bytecode). The compiler builds each tree exactly once into a
-#: prelude projection; CollapseProject keeps the projection because the
-#: helpers are non-cheap and multiply referenced.
-_STAGED_HELPERS: dict | None = None
+@dataclass(frozen=True, eq=False)
+class StagedToken:
+    """One staged field's JSON token views, built once per field by the
+    compiler: the raw cell ``src`` plus references to the helper columns
+    ``CompiledPlan.with_helpers`` projects for it (trimmed token, token
+    type, string payload, value repr). Every consumer reads these
+    references instead of rebuilding the regex-laden trees: copied into
+    each check, the trees made the compiled method too large to JIT
+    (round 6; the staged kernel ran 2.7x slower as interpreted
+    bytecode)."""
+
+    src: Column
+    trim: Column
+    jt: Column
+    inner: Column
+    repr: Column
 
 
-def json_trimmed(src: Column) -> Column:
-    """``trim(src)`` — or the pre-projected helper when one is active."""
-    if _STAGED_HELPERS is not None and "trim" in _STAGED_HELPERS:
-        return F.col(_STAGED_HELPERS["trim"])
-    return F.trim(src)
-
-
-def json_token_type(src: Column) -> Column:
-    """Classify a JSON-encoded cell: bool/int/float/string/array/object/null."""
-    if _STAGED_HELPERS is not None and "jt" in _STAGED_HELPERS:
-        return F.col(_STAGED_HELPERS["jt"])
-    t = json_trimmed(src)
+def json_token_type(t: Column) -> Column:
+    """Classify a trimmed JSON token: bool/int/float/string/array/object/null."""
     return (
         F.when(t.isin("true", "false"), F.lit("bool"))
         .when(t.rlike(_INT_RE), F.lit("int"))
@@ -122,24 +121,21 @@ def json_token_type(src: Column) -> Column:
     )
 
 
-def json_inner_string(src: Column) -> Column:
-    """Extract the payload of a JSON string token (no unescaping — the
-    staged fixtures avoid escape sequences by construction)."""
-    if _STAGED_HELPERS is not None and "inner" in _STAGED_HELPERS:
-        return F.col(_STAGED_HELPERS["inner"])
-    t = json_trimmed(src)
-    return t.substr(F.lit(2), F.length(t) - 2)
+def json_inner_string(t: Column) -> Column:
+    """Payload of a trimmed JSON string token. A token with a backslash
+    is decoded as JSON (``"\\u00e9"`` -> ``é``, as the reference's
+    ``json.loads``); one that does not parse keeps its raw payload."""
+    payload = t.substr(F.lit(2), F.length(t) - 2)
+    decoded = F.try_variant_get(F.try_parse_json(t), "$", "string")
+    return F.when(t.contains("\\"), F.coalesce(decoded, payload)).otherwise(payload)
 
 
-def json_value_repr(src: Column) -> Column:
-    """Python-``repr``-alike of a JSON-encoded cell, for message
-    templates like ``Failed to coerce {value!r} to integer``."""
-    if _STAGED_HELPERS is not None and "repr" in _STAGED_HELPERS:
-        return F.col(_STAGED_HELPERS["repr"])
-    t = json_trimmed(src)
-    jt = json_token_type(src)
+def json_value_repr(t: Column, jt: Column, inner: Column) -> Column:
+    """Python-``repr``-alike of a trimmed JSON token of type ``jt`` and
+    string payload ``inner``, for message templates like
+    ``Failed to coerce {value!r} to integer``."""
     return (
-        F.when(jt == "string", F.concat(F.lit("'"), json_inner_string(src), F.lit("'")))
+        F.when(jt == "string", F.concat(F.lit("'"), inner, F.lit("'")))
         .when(jt == "bool", F.when(t == "true", F.lit("True")).otherwise(F.lit("False")))
         .otherwise(t)
     )
@@ -293,7 +289,7 @@ class Field:
             return col.cast(expected)
         return col
 
-    def staged_load(self, src: Column) -> StagedLoad:
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
         """Strict/non-strict cast kernel over a JSON-encoded string cell."""
         raise NotImplementedError(
             f"{type(self).__name__} does not support staged (JSON) ingestion"
@@ -303,9 +299,9 @@ class Field:
     def type_expr(self) -> Any:
         return None
 
-    def value_repr(self, src: Column, staged: bool) -> Column:
-        if staged:
-            return json_value_repr(src)
+    def value_repr(self, src: Column, tok: Optional[StagedToken]) -> Column:
+        if tok is not None:
+            return tok.repr
         return src.cast("string")
 
     def format_error(self, error_code: str, context: Any) -> Any:
@@ -350,16 +346,15 @@ class String(Field):
     def typed_load(self, col: Column) -> Column:
         return col.cast("string")
 
-    def staged_load(self, src: Column) -> StagedLoad:
-        jt = json_token_type(src)
-        inner = json_inner_string(src)
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
+        jt, inner = tok.jt, tok.inner
         if self.strict:
             err = F.when(
                 jt != "string", _type_error(ErrorCode.STRING_INVALID_DATATYPE, "Value must be a string")
             ).otherwise(_null_error())
             return StagedLoad(loaded=F.when(jt == "string", inner), type_error=err)
         # str(value): string -> payload; bool -> 'True'/'False'; number -> token
-        t = json_trimmed(src)
+        t = tok.trim
         loaded = (
             F.when(jt == "string", inner)
             .when(jt == "bool", F.when(t == "true", F.lit("True")).otherwise(F.lit("False")))
@@ -384,10 +379,8 @@ class Integer(Field):
     def spark_type(self) -> T.DataType:
         return T.LongType()
 
-    def staged_load(self, src: Column) -> StagedLoad:
-        jt = json_token_type(src)
-        t = json_trimmed(src)
-        inner = json_inner_string(src)
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
+        jt, t, inner = tok.jt, tok.trim, tok.inner
         if self.strict:
             ok = jt.isin("int", "bool")  # bool quirk
             err = F.when(
@@ -409,7 +402,7 @@ class Integer(Field):
         # formats, matching Python int(str).
         fail = cast_attempt.isNull()
         msg = F.concat(
-            F.lit("Failed to coerce "), json_value_repr(src), F.lit(" to integer")
+            F.lit("Failed to coerce "), tok.repr, F.lit(" to integer")
         )
         err = F.when(fail, _type_error(ErrorCode.INTEGER_COERCION_FAILED, msg)).otherwise(
             _null_error()
@@ -430,10 +423,8 @@ class Float(Field):
     def spark_type(self) -> T.DataType:
         return T.DoubleType()
 
-    def staged_load(self, src: Column) -> StagedLoad:
-        jt = json_token_type(src)
-        t = json_trimmed(src)
-        inner = json_inner_string(src)
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
+        jt, t, inner = tok.jt, tok.trim, tok.inner
         if self.strict:
             err = F.when(
                 jt != "float",
@@ -448,7 +439,7 @@ class Float(Field):
             .when(jt == "string", F.trim(inner).try_cast("double"))
         )
         fail = cast_attempt.isNull()
-        msg = F.concat(F.lit("Failed to coerce "), json_value_repr(src), F.lit(" to float"))
+        msg = F.concat(F.lit("Failed to coerce "), tok.repr, F.lit(" to float"))
         err = F.when(fail, _type_error(ErrorCode.FLOAT_COERCION_FAILED, msg)).otherwise(
             _null_error()
         )
@@ -481,10 +472,8 @@ class Boolean(Field):
     def spark_type(self) -> T.DataType:
         return T.BooleanType()
 
-    def staged_load(self, src: Column) -> StagedLoad:
-        jt = json_token_type(src)
-        t = json_trimmed(src)
-        inner = json_inner_string(src)
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
+        jt, t, inner = tok.jt, tok.trim, tok.inner
         if self.strict:
             err = F.when(
                 jt != "bool", _type_error(ErrorCode.BOOLEAN_INVALID_DATATYPE, "Value must be a boolean")
@@ -519,7 +508,7 @@ class Binary(Field):
     def spark_type(self) -> T.DataType:
         return T.BinaryType()
 
-    def value_repr(self, src: Column, staged: bool) -> Column:
+    def value_repr(self, src: Column, tok: Optional[StagedToken]) -> Column:
         return F.concat(F.lit("<"), F.length(src).cast("string"), F.lit(" bytes>"))
 
 
@@ -552,11 +541,11 @@ class _KernelField(Field):
     invalid_message: Optional[str] = None  # None => kernel decides
     expected_token: Optional[str] = None  # 'array' / 'object'
 
-    def staged_load(self, src: Column) -> StagedLoad:
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
         # the kernel produces the message list; compiler splices it in.
         # loaded value: best-effort from_json with the target spark type.
         st = self.spark_type()
-        loaded = F.from_json(src, st) if st is not None else src
+        loaded = F.from_json(tok.src, st) if st is not None else tok.src
         return StagedLoad(loaded=loaded, type_error=_null_error())
 
 
@@ -815,8 +804,8 @@ class Tuple(_KernelField):
 class Any_(Field):
     """Passthrough field, no validation (reference oblate/fields/typings.py:51-61)."""
 
-    def staged_load(self, src: Column) -> StagedLoad:
-        return StagedLoad(loaded=src, type_error=_null_error())
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
+        return StagedLoad(loaded=tok.src, type_error=_null_error())
 
 
 class Literal(Field):
@@ -849,18 +838,17 @@ class Literal(Field):
             ).otherwise(_null_error())
         ]
 
-    def staged_load(self, src: Column) -> StagedLoad:
-        t = json_trimmed(src)
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
+        t = tok.trim
         tokens = [json.dumps(v) for v in self.values]
         numeric = [v for v in self.values if isinstance(v, (int, float)) and not isinstance(v, bool)]
         ok = t.isin(tokens)
         if numeric:
-            jt = json_token_type(src)
-            ok = ok | (jt.isin("int", "float") & t.cast("double").isin([float(v) for v in numeric]))
+            ok = ok | (tok.jt.isin("int", "float") & t.cast("double").isin([float(v) for v in numeric]))
         err = F.when(~ok, _type_error(ErrorCode.LITERAL_INVALID_VALUE, self.message)).otherwise(
             _null_error()
         )
-        return StagedLoad(loaded=src, type_error=err)
+        return StagedLoad(loaded=tok.src, type_error=err)
 
 
 class Union(_KernelField):
@@ -950,10 +938,10 @@ class Union(_KernelField):
 
         return typing.Union[self.types]
 
-    def staged_load(self, src: Column) -> StagedLoad:
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
         if not self.all_primitive():
-            return super().staged_load(src)
-        jt = json_token_type(src)
+            return super().staged_load(tok)
+        jt = tok.jt
         accepted: list[str] = []
         for tp in self.types:
             accepted.extend(self._PRIMITIVE_TOKENS[tp])
@@ -970,13 +958,13 @@ class Union(_KernelField):
         names = ", ".join(t.__name__ for t in self.types)
         msg = F.concat(
             F.lit("Type of "),
-            json_value_repr(src),
+            tok.repr,
             F.lit(" ("),
             tname,
             F.lit(f") is not compatible with types ({names})"),
         )
         err = F.when(~ok, _type_error(ErrorCode.UNION_INVALID_VALUE, msg)).otherwise(_null_error())
-        return StagedLoad(loaded=src, type_error=err)
+        return StagedLoad(loaded=tok.src, type_error=err)
 
 
 class TypeExpr(_KernelField):
@@ -1014,8 +1002,8 @@ class Object(Field):
     def accepts_spark_type(self, dt: T.DataType) -> bool:
         return isinstance(dt, T.StructType)
 
-    def staged_load(self, src: Column) -> StagedLoad:
-        return StagedLoad(loaded=src, type_error=_null_error())
+    def staged_load(self, tok: StagedToken) -> StagedLoad:
+        return StagedLoad(loaded=tok.src, type_error=_null_error())
 
 
 def _spark_type_of(tp: Any) -> Optional[T.DataType]:

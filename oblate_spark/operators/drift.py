@@ -11,9 +11,10 @@ Scale notes:
 * ``fixed_width_histogram`` — one groupBy on a derived bin id
   (map-side combinable; at most ``nbins`` groups, so the shuffle is
   tiny regardless of table size).
-* ``psi`` / ``ks_statistic`` — computed on the *binned* frames
-  (≤ nbins rows each): driver-side math on sketch output, never on raw
-  data.
+* ``psi`` / ``ks_statistic`` / ``drift_statistics`` — one aggregate
+  over the *binned* ids of both sides (≤ a few hundred rows):
+  driver-side math on its output, never on raw data. Every PSI in the
+  engine, categorical and windowed included, is ``psi_from_probs``.
 * ``approx_quantiles`` / ``grouped_approx_quantiles`` — one
   ``percentile_approx`` aggregate (globally, or per key): partial
   sketches combine map-side in the JVM, so sketch memory is set by
@@ -22,7 +23,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import math
 from typing import Sequence
 
 import numpy as np
@@ -67,12 +67,14 @@ def fixed_width_histogram(
     )
 
 
-def _hist_to_probs(hist: DataFrame, nbins: int) -> np.ndarray:
-    counts = np.zeros(nbins, dtype=np.float64)
-    for r in hist.collect():  # ≤ nbins rows
-        counts[int(r["bin"])] = float(r["cnt"])
-    total = counts.sum()
-    return counts / total if total > 0 else counts
+def psi_from_probs(pe, pa, eps: float) -> float:
+    """PSI = sum over bins of (p_a - p_e) * ln(p_a / p_e), both
+    probability vectors floored at ``eps`` (an empty bin would make the
+    log infinite). Common thresholds: <0.1 stable, 0.1-0.25 moderate
+    shift, >0.25 major shift."""
+    pe = np.clip(np.asarray(pe, dtype=np.float64), eps, None)
+    pa = np.clip(np.asarray(pa, dtype=np.float64), eps, None)
+    return float(np.sum((pa - pe) * np.log(pa / pe)))
 
 
 def psi(
@@ -85,17 +87,12 @@ def psi(
     nbins: int = 32,
     eps: float = 1e-6,
 ) -> float:
-    """Population Stability Index between two frames on one column.
-
-    PSI = sum over bins of (p_a - p_e) * ln(p_a / p_e), with ``eps``
-    flooring empty bins. Common thresholds: <0.1 stable, 0.1-0.25
-    moderate shift, >0.25 major shift.
-    """
-    pe = _hist_to_probs(fixed_width_histogram(expected, col, lo=lo, hi=hi, nbins=nbins), nbins)
-    pa = _hist_to_probs(fixed_width_histogram(actual, col, lo=lo, hi=hi, nbins=nbins), nbins)
-    pe = np.clip(pe, eps, None)
-    pa = np.clip(pa, eps, None)
-    return float(np.sum((pa - pe) * np.log(pa / pe)))
+    """Population Stability Index between two frames on one column, over
+    ``nbins`` fixed-width bins (:func:`psi_from_probs`); one aggregate
+    job, as :func:`drift_statistics`."""
+    return drift_statistics(
+        expected, actual, col=col, lo=lo, hi=hi, nbins_psi=nbins, nbins_ks=nbins, eps=eps
+    )["psi"]
 
 
 def ks_statistic(
@@ -109,10 +106,11 @@ def ks_statistic(
 ) -> float:
     """Two-sample Kolmogorov–Smirnov statistic approximated on binned
     CDFs (exact as nbins -> distinct values; 256 bins bounds the error
-    at ~1/256 of the range)."""
-    pe = _hist_to_probs(fixed_width_histogram(expected, col, lo=lo, hi=hi, nbins=nbins), nbins)
-    pa = _hist_to_probs(fixed_width_histogram(actual, col, lo=lo, hi=hi, nbins=nbins), nbins)
-    return float(np.max(np.abs(np.cumsum(pe) - np.cumsum(pa))))
+    at ~1/256 of the range); one aggregate job, as
+    :func:`drift_statistics`."""
+    return drift_statistics(
+        expected, actual, col=col, lo=lo, hi=hi, nbins_psi=nbins, nbins_ks=nbins
+    )["ks"]
 
 
 def _drift_from_tagged(
@@ -157,9 +155,9 @@ def _drift_from_tagged(
         ha[int(r["bp"])] += r["ca"]
         ke[int(r["bk"])] += r["ce"]
         ka[int(r["bk"])] += r["ca"]
-    pe = np.clip(he / he.sum() if he.sum() > 0 else he, eps, None)
-    pa = np.clip(ha / ha.sum() if ha.sum() > 0 else ha, eps, None)
-    psi_val = float(np.sum((pa - pe) * np.log(pa / pe)))
+    psi_val = psi_from_probs(
+        he / he.sum() if he.sum() > 0 else he, ha / ha.sum() if ha.sum() > 0 else ha, eps
+    )
     qe = ke / ke.sum() if ke.sum() > 0 else ke
     qa = ka / ka.sum() if ka.sum() > 0 else ka
     ks_val = float(np.max(np.abs(np.cumsum(qe) - np.cumsum(qa))))
@@ -304,12 +302,7 @@ def categorical_psi(
     a = {r["value"]: float(r["cnt"]) for r in categorical_histogram(actual, col).collect()}
     cats = sorted(set(e) | set(a))
     et, at = sum(e.values()) or 1.0, sum(a.values()) or 1.0
-    total = 0.0
-    for c in cats:
-        pe = max(e.get(c, 0.0) / et, eps)
-        pa = max(a.get(c, 0.0) / at, eps)
-        total += (pa - pe) * math.log(pa / pe)
-    return float(total)
+    return psi_from_probs([e.get(c, 0.0) / et for c in cats], [a.get(c, 0.0) / at for c in cats], eps)
 
 
 def categorical_psi_flagged(
@@ -338,14 +331,8 @@ def categorical_psi_flagged(
     )
     et = float(sum(r["ce"] for r in rows)) or 1.0
     at = float(sum(r["ca"] for r in rows)) or 1.0
-    total = 0.0
-    for r in rows:
-        if r["ce"] == 0 and r["ca"] == 0:
-            continue  # category absent from both populations
-        pe = max(r["ce"] / et, eps)
-        pa = max(r["ca"] / at, eps)
-        total += (pa - pe) * math.log(pa / pe)
-    return float(total)
+    # a category absent from both populations adds (eps - eps) * ln 1 = 0
+    return psi_from_probs([r["ce"] / et for r in rows], [r["ca"] / at for r in rows], eps)
 
 
 def image_table_drift_report(

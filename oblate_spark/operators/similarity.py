@@ -401,16 +401,17 @@ def knn_bruteforce_pandas(
     and empty Arrow batches are skipped, not task failures; zero-norm
     vectors are dropped (0/0 would make NaN cosines, and Spark sorts
     NaN ABOVE every real double — a zero vector would otherwise become
-    everyone's rank-1 neighbor). Ids are emitted as strings (the
-    declared output schema)."""
+    everyone's rank-1 neighbor), so a zero-norm query gets no
+    neighbours, as in ``knn_bruteforce``. Ids are emitted as strings
+    (the declared output schema)."""
     import numpy as np
     import pandas as pd
 
     qids = np.asarray([str(q[0]) for q in queries_local])
     qmat = np.asarray([q[1] for q in queries_local], dtype=np.float64)
     qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0  # zero-norm query -> all-zero sims, not NaN
-    qnorm = qmat / qn
+    nonzero_q = qn[:, 0] > 0
+    qids, qnorm = qids[nonzero_q], qmat[nonzero_q] / qn[nonzero_q]
 
     def score(iterator):
         for pdf in iterator:

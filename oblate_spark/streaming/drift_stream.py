@@ -14,12 +14,11 @@ before the bad data lands in training.
 
 from __future__ import annotations
 
-import math
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.drift import bin_expr
+from ..operators.drift import bin_expr, psi_from_probs
 
 __all__ = ["windowed_bin_counts", "psi_per_window"]
 
@@ -74,13 +73,9 @@ def psi_per_window(
     per_window: dict = {}
     for r in rows:
         per_window.setdefault(r["window_start"], {})[int(r["bin"])] = float(r["cnt"])
+    pe = [float(reference_probs.get(b, 0.0)) for b in range(nbins)]
     out = {}
     for w, counts in per_window.items():
         total = sum(counts.values()) or 1.0
-        psi = 0.0
-        for b in range(nbins):
-            pe = max(float(reference_probs.get(b, 0.0)), eps)
-            pa = max(counts.get(b, 0.0) / total, eps)
-            psi += (pa - pe) * math.log(pa / pe)
-        out[w] = psi
+        out[w] = psi_from_probs(pe, [counts.get(b, 0.0) / total for b in range(nbins)], eps)
     return out

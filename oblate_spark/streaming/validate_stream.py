@@ -29,20 +29,17 @@ def validate_stream(
     row_id: Optional[str] = None,
     extra_columns_ok: tuple[str, ...] = ("row_id",),
 ) -> DataFrame:
-    """Annotate a streaming DataFrame with ``_violations`` and ``_valid``.
+    """Annotate a streaming DataFrame with ``_violations`` and ``_valid``:
+    ``engine.validate(...).annotated``, so a stream shares the batch
+    path's compiled-plan cache, staged helper columns and SchemaContext.
 
     Stateless: every check is a projection, so this adds no streaming
     state and preserves the source's watermark/event-time columns."""
-    from ..compiler import compile_plan
-    from ..engine import _resolve_row_id
+    from ..engine import validate
 
-    plan = compile_plan(schema_cls, stream_df, mode=mode, extra_columns_ok=extra_columns_ok)
-    return stream_df.withColumns(
-        {
-            "_row_id": _resolve_row_id(stream_df, row_id),
-            "_violations": plan.violations_column(),
-        }
-    ).withColumn("_valid", F.size("_violations") == 0)
+    return validate(
+        stream_df, schema_cls, mode=mode, row_id=row_id, extra_columns_ok=extra_columns_ok
+    ).annotated
 
 
 def violation_counts_windowed(

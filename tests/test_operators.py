@@ -368,11 +368,11 @@ def test_ivf_empty_corpus_returns_empty(spark):
 def test_zero_norm_vectors_never_pair_and_never_fail(spark):
     """A zero-norm vector has a NULL cosine (no ANSI DIVIDE_BY_ZERO):
     IVF assignment, the candidate-pair join, the exhaustive kernel and
-    both kNN searches all succeed, and no output pair holds it. A zero
-    query gets no neighbours."""
+    the three kNN searches all succeed, and no output pair holds it. A
+    zero query gets no neighbours."""
     from oblate_spark.operators.dedup import embedding_near_duplicates
     from oblate_spark.operators.similarity import (
-        cosine_expr, ivf_assign, knn_bruteforce, knn_ivf,
+        cosine_expr, ivf_assign, knn_bruteforce, knn_bruteforce_pandas, knn_ivf,
     )
 
     vecs = spark.range(50).select(
@@ -394,9 +394,11 @@ def test_zero_norm_vectors_never_pair_and_never_fail(spark):
     knn_kw = dict(id_col="id", vec_col="vec", k=3)
     brute = knn_bruteforce(vecs, queries, **knn_kw).collect()
     ivf = knn_ivf(vecs, queries, n_centroids=4, nprobe=4, **knn_kw).collect()
-    for res in (brute, ivf):
-        assert {r.query_id for r in res} == {1, 2}
-        assert all(r.neighbor_id != 0 and r.cosine is not None for r in res)
+    local = [(r.id, r.vec) for r in queries.collect()]
+    numpy_brute = knn_bruteforce_pandas(vecs, local, **knn_kw).collect()  # string ids
+    for res in (brute, ivf, numpy_brute):
+        assert {str(r.query_id) for r in res} == {"1", "2"}
+        assert all(str(r.neighbor_id) != "0" and r.cosine is not None for r in res)
         assert sorted(r.rank for r in res) == [1, 1, 2, 2, 3, 3]
 
 

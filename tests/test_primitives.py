@@ -4,10 +4,12 @@ with reference tests/test_fields_primitive.py."""
 from __future__ import annotations
 
 import json
+import sys
 
 import pytest
 
 from oblate_spark import Schema, fields
+from oblate_spark import validate as V
 
 
 def staged_df(spark, rows: dict[str, list]):
@@ -91,8 +93,9 @@ def test_nonstrict_coercions(spark):
     res = LaxSchema.validate(df, mode="staged")
     assert violations_map(res) == {}
     # check coerced values via the public lookup API (plan.loaded
-    # expressions reference the staged helper prelude since round 6, so
-    # they resolve through get_values_for, not over bare annotated)
+    # expressions reference the staged helper columns, which
+    # CompiledPlan.with_helpers projects and the annotated frame drops,
+    # so they resolve through get_values_for, not over bare annotated)
     byid: dict = {}
     for fieldname in ("s", "i", "f", "b"):
         for rid, v in res.get_values_for(["0", "1"], fieldname).items():
@@ -127,3 +130,78 @@ def test_boolean_custom_values(spark):
     vm = violations_map(res)
     assert list(vm) == ["2"]
     assert vm["2"] == [("b", "Failed to coerce 'yes' to boolean")]
+
+
+class _RaceA(Schema):
+    a1 = fields.Integer()
+    a2 = fields.Float()
+    a3 = fields.String()
+
+
+class _RaceB(Schema):
+    b1 = fields.Integer()
+    b2 = fields.Float()
+    b3 = fields.String()
+
+
+def test_staged_compile_is_thread_safe(spark):
+    """Two threads compiling different staged schemas at once each get
+    the plan a serial compile gives: a field's helper columns reach its
+    checks through the compile's own token, not through shared state."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from oblate_spark.compiler import compile_plan
+
+    dfa = staged_df(spark, {"a1": [1, "x"], "a2": [1.5, 2], "a3": ["s", 3]})
+    dfb = staged_df(spark, {"b1": [2, 2.5], "b2": ["y", 0.5], "b3": [True, "t"]})
+
+    def sig(plan):
+        layers = [{k: str(v) for k, v in layer.items()} for layer in plan.prelude]
+        return str(plan.violations_column()), layers
+
+    serial = {
+        cls: sig(compile_plan(cls, df, mode="staged")) for cls, df in ((_RaceA, dfa), (_RaceB, dfb))
+    }
+
+    def compile_many(cls, df):
+        return [compile_plan(cls, df, mode="staged") for _ in range(30)]
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            fa = pool.submit(compile_many, _RaceA, dfa)
+            fb = pool.submit(compile_many, _RaceB, dfb)
+            plans_a, plans_b = fa.result(timeout=300), fb.result(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert [sig(p) for p in plans_a] == [serial[_RaceA]] * 30
+    assert [sig(p) for p in plans_b] == [serial[_RaceB]] * 30
+
+    plan = plans_a[-1]
+    rows = plan.with_helpers(dfa).select("row_id", plan.violations_column().alias("v")).collect()
+    got = {r["row_id"]: sorted((v["field_key"], v["message"]) for v in r["v"]) for r in rows}
+    assert got == {
+        "0": [],
+        "1": [
+            ("a1", "Value must be an integer"),
+            ("a2", "Value must be a floating point number"),
+            ("a3", "Value must be a string"),
+        ],
+    }
+
+
+class EscapedString(Schema):
+    s = fields.String(validators=[V.Length(max=1)])
+
+
+def test_staged_string_escapes_are_decoded(spark):
+    """A staged string token is decoded like the reference's json.loads:
+    ``"\\u00e9"`` is the one character é and passes Length(max=1);
+    ``"a\\"b"`` loads as a"b, repr 'a"b'."""
+    df = staged_df(spark, {"s": ["é", 'a"b']})
+    assert [r["s"] for r in df.orderBy("row_id").collect()] == ['"\\u00e9"', '"a\\"b"']
+    res = EscapedString.validate(df, mode="staged")
+    got = [(r["row_id"], r["error_code"], r["value_repr"]) for r in res.violations.collect()]
+    assert got == [("1", "validate.length", "'a\"b'")]
+    assert res.get_values_for(["0", "1"], "s") == {"0": "é", "1": 'a"b'}

@@ -95,6 +95,43 @@ def test_valid_invalid_split(spark, events_source):
     assert n_clean == exp["passed"]
 
 
+class StagedReading(Schema):
+    q = fields.Float(validators=[V.Range(0, 50)])
+
+
+def test_staged_stream_matches_batch(spark, tmp_path):
+    """A staged (JSON-string) stream gets the batch path's violations:
+    its check expressions reference the per-field helper columns, which
+    the stream must project too; the helpers stay out of the output."""
+    src = str(tmp_path / "staged_src")
+    batch = spark.createDataFrame(
+        [("0", "1.5"), ("1", '"bad"'), ("2", "99.0")], "row_id string, q string"
+    )
+    batch.write.parquet(src)
+    stream = spark.readStream.schema(batch.schema).parquet(src)
+    annotated = validate_stream(stream, StagedReading, mode="staged")
+    assert not [c for c in annotated.columns if c.startswith("__sp_")]
+    q = (
+        annotated.writeStream.format("memory")
+        .queryName("staged_stream_validation")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    def codes(rows):
+        return {r["row_id"]: sorted((v["field_key"], v["error_code"]) for v in r["_violations"]) for r in rows}
+
+    got = codes(spark.sql("SELECT * FROM staged_stream_validation").collect())
+    assert got == {
+        "0": [],
+        "1": [("q", "float.invalid_datatype")],
+        "2": [("q", "validate.range")],
+    }
+    assert got == codes(StagedReading.validate(batch, mode="staged").annotated.collect())
+
+
 def test_stateful_sessionization_stream(spark, tmp_path):
     """applyInPandasWithState custom stateful operator: state persists
     across micro-batches (a session spanning two files is ONE session)

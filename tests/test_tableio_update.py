@@ -441,31 +441,6 @@ def test_incremental_validator_rebases_when_chain_cut(spark, tmp_path):
     assert "rebase" not in r2 and r2["rows"] == 1
 
 
-def test_incremental_validator_cleanup_hook_called_per_batch(spark, tmp_path):
-    """The cleanup hook receives the RAW job output after the batch's
-    violations are persisted (release_report-style resource release)."""
-    from oblate_spark.checkpoint import IncrementalValidator
-
-    t = make_table(spark, tmp_path)
-    seen = []
-
-    def job(batch):
-        df = batch.selectExpr(
-            "cast(id as string) as row_id", "'score' as field_key",
-            "'x' as error_code", "'m' as message",
-            "cast(null as string) as value_repr", "-1 as partition_id",
-        ).limit(0)
-        df._marker = len(seen)
-        return df
-
-    iv = IncrementalValidator(t, run_dir=str(tmp_path / "ivrun"), job=job,
-                              cleanup=lambda df: seen.append(df._marker))
-    iv.validate_new()
-    t.append(spark.createDataFrame([(3, "c", 70)], "id long, name string, score long"))
-    iv.validate_new()
-    assert seen == [0, 1]
-
-
 def test_resumable_run_uri_and_multi_dir_source(spark, tmp_path):
     """The source listing goes through the Hadoop FileSystem API
     (object-store-safe): a file: URI and a LIST of directories both
