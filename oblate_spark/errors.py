@@ -25,8 +25,6 @@ __all__ = [
     "ErrorCode",
     "MESSAGES",
     "VIOLATION_COLUMNS",
-    "default_message",
-    "py_repr",
     "all_error_codes",
     "ErrorContext",
     "FieldNotSet",
@@ -110,20 +108,6 @@ MESSAGES: dict[str, str] = {
     ErrorCode.LIST_INVALID_DATATYPE: "Must be a valid list",
     ErrorCode.SET_INVALID_DATATYPE: "Must be a valid set",
 }
-
-
-def default_message(code: str, value: Any = None) -> str:
-    """Render the default message for ``code``; ``{value!r}`` templates
-    are formatted with ``value``."""
-    template = MESSAGES.get(code, "An unknown error occurred while validating this field.")
-    if "{value!r}" in template:
-        return template.replace("{value!r}", repr(value))
-    return template
-
-
-def py_repr(value: Any) -> str:
-    """Python ``repr`` used for ``value_repr`` in violation rows."""
-    return repr(value)
 
 
 VIOLATION_COLUMNS = [

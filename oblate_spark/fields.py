@@ -370,6 +370,11 @@ class Integer(Field):
     ``isinstance(True, int)`` is True (reference :114). Non-strict
     follows Python ``int(value)``: floats truncate toward zero, strings
     must be integral literals.
+
+    One departure from the reference: values are 64-bit (``bigint``).
+    A staged token that is an integer past that range, or (non-strict)
+    a float or string whose integer part is, fails with
+    ``integer.coercion_failed`` instead of loading as a Python big int.
     """
 
     def __init__(self, strict: bool = True, **kwargs: Any) -> None:
@@ -381,32 +386,31 @@ class Integer(Field):
 
     def staged_load(self, tok: StagedToken) -> StagedLoad:
         jt, t, inner = tok.jt, tok.trim, tok.inner
+        msg = F.concat(F.lit("Failed to coerce "), tok.repr, F.lit(" to integer"))
+        coercion_failed = _type_error(ErrorCode.INTEGER_COERCION_FAILED, msg)
         if self.strict:
             ok = jt.isin("int", "bool")  # bool quirk
-            err = F.when(
-                ~ok, _type_error(ErrorCode.INTEGER_INVALID_DATATYPE, "Value must be an integer")
-            ).otherwise(_null_error())
-            loaded = F.when(jt == "int", t.cast("bigint")).when(
+            loaded = F.when(jt == "int", t.try_cast("bigint")).when(
                 jt == "bool", (t == "true").cast("bigint")
+            )
+            invalid = _type_error(ErrorCode.INTEGER_INVALID_DATATYPE, "Value must be an integer")
+            err = (
+                F.when(~ok, invalid)
+                .when((jt == "int") & loaded.isNull(), coercion_failed)  # past 64 bits
+                .otherwise(_null_error())
             )
             return StagedLoad(loaded=loaded, type_error=err)
         # int(value): int token; float truncates toward zero; bool -> 0/1;
         # string must be an integral literal (int('3.14') raises).
         cast_attempt = (
-            F.when(jt == "int", t.cast("bigint"))
-            .when(jt == "float", t.cast("double").cast("bigint"))
+            F.when(jt == "int", t.try_cast("bigint"))
+            .when(jt == "float", t.try_cast("double").try_cast("bigint"))
             .when(jt == "bool", (t == "true").cast("bigint"))
             .when(jt == "string", F.trim(inner).try_cast("bigint"))
         )
-        # try_cast on a decimal string yields NULL only for non-integral
-        # formats, matching Python int(str).
-        fail = cast_attempt.isNull()
-        msg = F.concat(
-            F.lit("Failed to coerce "), tok.repr, F.lit(" to integer")
-        )
-        err = F.when(fail, _type_error(ErrorCode.INTEGER_COERCION_FAILED, msg)).otherwise(
-            _null_error()
-        )
+        # try_cast yields NULL for a non-integral string (as Python
+        # int(str) raises) and for a value past 64 bits.
+        err = F.when(cast_attempt.isNull(), coercion_failed).otherwise(_null_error())
         return StagedLoad(loaded=cast_attempt, type_error=err)
 
 

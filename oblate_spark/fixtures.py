@@ -212,15 +212,6 @@ def build_images_df(
     return spark.range(0, n_rows, numPartitions=partitions).mapInPandas(gen, IMAGES_SCHEMA)
 
 
-def write_images_table(
-    spark: SparkSession, n_rows: int, path: str, *, partitions: int | None = None,
-    px: tuple[int, int] = DEFAULT_PX,
-) -> str:
-    df = build_images_df(spark, n_rows, partitions=partitions, px=px)
-    df.write.mode("overwrite").parquet(path)
-    return path
-
-
 INDEXED_IMAGES_SCHEMA = (
     "idx bigint, image_id string, bytes binary, fmt string, caption string"
 )

@@ -30,7 +30,6 @@ __all__ = [
     "decode_image",
     "detect_format",
     "phash64",
-    "hamming64",
     "psnr",
     "ImageDecodeError",
 ]
@@ -368,10 +367,6 @@ def phash64(pixels: np.ndarray) -> int:
     if val >= 1 << 63:
         val -= 1 << 64
     return int(val)
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

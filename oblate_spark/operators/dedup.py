@@ -16,7 +16,10 @@ Scale notes:
   combinable; duplicate groups are tiny, joined back broadcast.
 * minhash_signatures — explode to (doc, shingle) then ONE groupBy(doc)
   computing all H minhashes via conditional min aggregates (no
-  per-hash shuffle). Shuffle volume = distinct shingles per doc.
+  per-hash shuffle). Shuffle volume = distinct shingles per doc. The
+  output is one row per doc holding the H minhashes as an array.
+* lsh_band_signatures — a projection of that row: each band is a slice
+  of the minhash array, hashed in place (no shuffle, no regrouping).
 * lsh_candidate_pairs — band signatures bucket-join; only docs sharing
   a band collide. The self-join is on (band, sig) — high-cardinality
   keys, so no skew unless a band bucket is genuinely hot (near-dup
@@ -38,6 +41,7 @@ from .partitioning import ensure_fanout_parallelism
 __all__ = [
     "normalized_text",
     "exact_duplicates",
+    "shingle_array",
     "shingles",
     "minhash_signatures",
     "lsh_band_signatures",
@@ -80,74 +84,71 @@ def exact_duplicates(df: DataFrame, *, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles(df: DataFrame, *, id_col: str, text_col: str, k: int = 5) -> DataFrame:
-    """Distinct character k-shingles per document: (id, shingle).
-    Computed with sequence+transform (no UDF); array_distinct before the
-    explode keeps the exploded row count = distinct shingles. A text
-    shorter than ``k`` (the empty text too) gives itself as its one
-    shingle; a NULL text gives one NULL shingle.
+def shingle_array(text, k: int = 5):
+    """The distinct character k-shingles of ``text`` (normalized) as one
+    array column, built with sequence+transform (no UDF). A text shorter
+    than ``k`` (the empty text too) gives itself as its one shingle; a
+    NULL text gives one NULL shingle.
 
-    The normalized text is bound once per document with
+    The normalized text is bound once per row with
     :func:`~.binding.let`: a shingle lambda that captured it directly
-    would rerun trim/lower/regexp_replace once per shingle.
-
-    The input is repartitioned BEFORE the explode: document tables are
-    often a single small file (one input split), and without the cheap
-    pre-shuffle the entire shingle+hash fan-out — the expensive part —
-    runs in one task (measured: zero core-scaling on sf0.1)."""
-    df = ensure_fanout_parallelism(df)
-    arr = F.array_distinct(
+    would rerun trim/lower/regexp_replace once per shingle."""
+    return F.array_distinct(
         let(
-            normalized_text(F.col(text_col)),
+            normalized_text(text),
             lambda txt: F.transform(
                 F.sequence(F.lit(1), F.greatest(F.length(txt) - (k - 1), F.lit(1))),
                 lambda i: txt.substr(i, F.lit(k)),
             ),
         )
     )
-    return df.select(F.col(id_col), F.explode(arr).alias("shingle"))
+
+
+def shingles(df: DataFrame, *, id_col: str, text_col: str, k: int = 5) -> DataFrame:
+    """Distinct character k-shingles per document: (id, shingle), one
+    row per element of :func:`shingle_array`.
+
+    The input is repartitioned BEFORE the explode: document tables are
+    often a single small file (one input split), and without the cheap
+    pre-shuffle the entire shingle+hash fan-out — the expensive part —
+    runs in one task (measured: zero core-scaling on sf0.1)."""
+    df = ensure_fanout_parallelism(df)
+    return df.select(F.col(id_col), F.explode(shingle_array(F.col(text_col), k)).alias("shingle"))
 
 
 def minhash_signatures(
     df: DataFrame, *, id_col: str, text_col: str, k: int = 5, num_hashes: int = 16
 ) -> DataFrame:
-    """(id, h, minhash) — H lexicographic-min md5 minhashes per doc.
+    """(id, minhashes): the H lexicographic-min md5 minhashes of a doc
+    as one array, in hash order.
 
     One explode + one groupBy(id); the H mins are computed as H
     conditional aggregates over the same shuffled data (seed prefixed
-    into the hashed string gives H independent hash functions).
+    into the hashed string gives H independent hash functions). A
+    per-row ``array_min`` over the shingle array, with no shingle
+    shuffle, hashes the same but measured slower.
     """
     sh = shingles(df, id_col=id_col, text_col=text_col, k=k)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{h}|"), F.col("shingle")))).alias(f"mh_{h}")
-        for h in range(num_hashes)
-    ]
-    wide = sh.groupBy(id_col).agg(*aggs)
-    stack = ", ".join(f"'{h}', mh_{h}" for h in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {stack}) as (h, minhash)"
-    ).withColumn("h", F.col("h").cast("int"))
+    mins = [F.min(F.md5(F.concat(F.lit(f"{h}|"), F.col("shingle")))) for h in range(num_hashes)]
+    return sh.groupBy(id_col).agg(F.array(*mins).alias("minhashes"))
 
 
 def lsh_band_signatures(
     signatures: DataFrame, *, id_col: str, rows_per_band: int = 4
 ) -> DataFrame:
-    """(id, band, band_sig): md5 of the band's minhashes joined in h
-    order. Docs agreeing on all hashes within a band share band_sig."""
-    banded = signatures.withColumn("band", (F.col("h") / rows_per_band).cast("int"))
-    return banded.groupBy(id_col, "band").agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("h"), F.col("minhash")))
-                    ),
-                    lambda s: s.getField("minhash"),
-                ),
-                ",",
-            )
-        ).alias("band_sig")
+    """(id, band, band_sig): md5 of the band's minhashes joined in hash
+    order. Docs agreeing on all hashes within a band share band_sig.
+    Each band is a slice of the doc's ``minhashes`` array, so this is a
+    per-row projection: no shuffle, no regrouping."""
+    mh = F.col("minhashes")
+    bands = F.transform(
+        F.sequence(F.lit(0), F.size(mh) - 1, F.lit(rows_per_band)),
+        lambda i: F.struct(
+            (i / rows_per_band).cast("int").alias("band"),
+            F.md5(F.array_join(F.slice(mh, i + 1, rows_per_band), ",")).alias("band_sig"),
+        ),
     )
+    return signatures.select(F.col(id_col), F.inline(bands))
 
 
 def lsh_candidate_pairs(

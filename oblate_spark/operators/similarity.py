@@ -6,13 +6,12 @@ of C deterministic centroids, then search only within the probed
 buckets — turning the O(N·Q) cross join into O(N·Q/C · nprobe).
 
 All dot products are JVM-side expressions (zip_with + aggregate); no
-Python in the scoring loop. A vectorized pandas-UDF scorer is provided
-for very wide vectors where numpy BLAS beats codegen'd loops.
+Python in the scoring loop.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -26,7 +25,6 @@ __all__ = [
     "ivf_assign",
     "knn_ivf",
     "ivf_bucket_candidate_pairs",
-    "knn_bruteforce_pandas",
     "label_centroids",
     "centroid_distance_outliers",
     "embedding_validation",
@@ -68,8 +66,8 @@ def knn_bruteforce(
     workload), so the corpus is scanned once with no shuffle; the only
     shuffle is the per-query top-k window. Excludes self-matches when
     ids collide. A zero-norm vector has a NULL cosine (``try_divide``)
-    and never ranks: a zero corpus vector is nobody's neighbour, as in
-    :func:`knn_bruteforce_pandas`, and a zero query gets no neighbours.
+    and never ranks: a zero corpus vector is nobody's neighbour, and a
+    zero query gets no neighbours.
     """
     qid = query_id_col or id_col
     # norms folded once per query / corpus row instead of once per
@@ -174,7 +172,6 @@ def ivf_assign(
     id_col: str,
     vec_col: str,
     n_centroids: int = 16,
-    centroids: Optional[DataFrame] = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Assign each vector to its nearest centroid (IVF coarse quantizer).
 
@@ -184,11 +181,7 @@ def ivf_assign(
     argmax is a single ``array_max(transform(...))`` expression: one
     corpus scan, zero shuffle, no N x C row expansion. Ties break to the
     smallest centroid_id."""
-    cents = (
-        centroids
-        if centroids is not None
-        else _centroids_from_corpus(corpus, id_col, vec_col, n_centroids)
-    )
+    cents = _centroids_from_corpus(corpus, id_col, vec_col, n_centroids)
     cent_rows = cents.collect()  # bounded: n_centroids rows
     # re-materialize the centroid frame as a LocalRelation over the rows
     # just collected: a downstream consumer (knn_ivf probes the same
@@ -204,10 +197,9 @@ def ivf_assign(
     )
     vec = F.col(vec_col)
     if not cent_rows:
-        # empty corpus / empty centroid frame: zero assignments, not an
-        # AnalysisException from field-extracting a NULL-typed array
-        # literal (an incremental pipeline's new-batch slice can be
-        # legitimately empty)
+        # empty corpus: zero assignments, not an AnalysisException from
+        # field-extracting a NULL-typed array literal (an incremental
+        # pipeline's new-batch slice can be legitimately empty)
         empty = corpus.select(
             F.col(id_col), vec.alias(vec_col), F.lit(None).cast("int").alias("bucket")
         ).limit(0)
@@ -382,67 +374,6 @@ def ivf_bucket_candidate_pairs(
     return self_join_pairs(buckets, id_col, ["bucket"]).select(
         F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
     )
-
-
-def knn_bruteforce_pandas(
-    corpus: DataFrame,
-    queries_local: Sequence[tuple],
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-) -> DataFrame:
-    """Vectorized-numpy variant: queries held as a broadcast numpy
-    matrix, corpus streamed through mapInPandas — one BLAS matmul per
-    Arrow batch. Preferable for wide vectors (d >= 512) where the
-    higher-order-function loop costs more than Arrow transfer.
-
-    Robustness (matches the JVM variant's tolerance): NULL embeddings
-    and empty Arrow batches are skipped, not task failures; zero-norm
-    vectors are dropped (0/0 would make NaN cosines, and Spark sorts
-    NaN ABOVE every real double — a zero vector would otherwise become
-    everyone's rank-1 neighbor), so a zero-norm query gets no
-    neighbours, as in ``knn_bruteforce``. Ids are emitted as strings
-    (the declared output schema)."""
-    import numpy as np
-    import pandas as pd
-
-    qids = np.asarray([str(q[0]) for q in queries_local])
-    qmat = np.asarray([q[1] for q in queries_local], dtype=np.float64)
-    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    nonzero_q = qn[:, 0] > 0
-    qids, qnorm = qids[nonzero_q], qmat[nonzero_q] / qn[nonzero_q]
-
-    def score(iterator):
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf[pdf[vec_col].notna()]
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].astype(str).to_numpy()
-            mat = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            nonzero = norms[:, 0] > 0
-            if not nonzero.all():
-                ids, mat, norms = ids[nonzero], mat[nonzero], norms[nonzero]
-            if len(ids) == 0:
-                continue
-            mat = mat / norms
-            sims = mat @ qnorm.T  # (batch, n_queries)
-            out = {
-                "query_id": np.repeat(qids, len(ids)),
-                "neighbor_id": np.tile(ids, len(qids)),
-                "cosine": sims.T.ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, "query_id string, neighbor_id string, cosine double"
-    )
-    scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def label_centroids(

@@ -30,7 +30,6 @@ from .drift import ACCURACY
 __all__ = [
     "column_profile",
     "duplicate_keys",
-    "uniqueness_violations",
     "multi_key_uniqueness_violations",
     "incremental_uniqueness_violations",
     "referential_violations",
@@ -126,40 +125,6 @@ def duplicate_keys(df: DataFrame, key_cols: Sequence[str] | str) -> DataFrame:
         df.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("dup_count"))
         .filter(F.col("dup_count") > 1)
-    )
-
-
-def uniqueness_violations(
-    df: DataFrame,
-    key_cols: Sequence[str] | str,
-    *,
-    row_id: str,
-) -> DataFrame:
-    """Row-lineage form: every row whose key is duplicated, as violation
-    rows (row_id, field_key, error_code, message, dup_count).
-
-    The dup-key set is usually tiny relative to the table; the join back
-    for lineage broadcasts it when AQE sees it is small.
-    """
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    dups = duplicate_keys(df, key_cols)
-    field_key = ",".join(key_cols)
-    return (
-        df.join(dups, on=list(key_cols), how="inner")
-        .select(
-            F.col(row_id).cast("string").alias("row_id"),
-            F.lit(field_key).alias("field_key"),
-            F.lit("unique.duplicate").alias("error_code"),
-            F.concat(
-                F.lit("Duplicate value for unique key ("),
-                F.lit(field_key),
-                F.lit("): appears "),
-                F.col("dup_count").cast("string"),
-                F.lit(" times"),
-            ).alias("message"),
-            F.col("dup_count"),
-        )
     )
 
 

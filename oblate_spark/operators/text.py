@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .binding import let
+from .dedup import shingle_array
+from .partitioning import ensure_fanout_parallelism
 
 __all__ = [
     "STOPWORDS",
@@ -140,24 +142,18 @@ def fingerprint(
     """(id, fingerprint): bottom-k sketch — md5 of the k smallest shingle
     digests. Documents sharing most content share most of their bottom-k
     set, so equal fingerprints ~ near-identical documents (winnowing-style
-    selection without the rolling window)."""
-    from .dedup import shingles
+    selection without the rolling window).
 
-    from pyspark.sql import Window
-
-    sh = shingles(df, id_col=id_col, text_col=text_col, k=shingle_len)
-    hashed = sh.select(F.col(id_col), F.md5(F.col("shingle")).alias("sh"))
-    # pre-rank to bottom-k BEFORE collecting: the aggregation buffer is
-    # bounded at k elements per doc instead of every distinct shingle
-    # hash (a 100 KB doc would otherwise buffer ~100k-element arrays).
-    # shingles() is distinct per doc, so row_number == distinct rank;
-    # the groupBy reuses the window's hash partitioning (no 2nd shuffle).
-    w = Window.partitionBy(id_col).orderBy("sh")
-    ranked = hashed.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k)
-    bottom = ranked.groupBy(id_col).agg(F.array_sort(F.collect_list("sh")).alias("bk"))
-    return bottom.select(
-        F.col(id_col), F.md5(F.array_join(F.col("bk"), ",")).alias("fingerprint")
-    )
+    One projection per document: the doc's distinct shingles are hashed,
+    sorted and cut to k inside its own row (no explode, no regroup). The
+    working set is that one shingle array, which ``shingles()`` builds
+    before its explode anyway. ``sort_array`` sorts natively;
+    ``array_sort``'s default comparator is an interpreted lambda. A
+    narrow scan is repartitioned first, as in ``shingles()``."""
+    df = ensure_fanout_parallelism(df)
+    hashes = F.sort_array(F.transform(shingle_array(F.col(text_col), shingle_len), F.md5))
+    bottom = F.slice(hashes, 1, k)
+    return df.select(F.col(id_col), F.md5(F.array_join(bottom, ",")).alias("fingerprint"))
 
 
 #: PII patterns, deliberately RE2-safe (no lookarounds, no backrefs) so

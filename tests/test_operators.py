@@ -332,29 +332,6 @@ def test_flagged_overlap_semantics_consistent(spark):
     assert abs(stats["ks"] - abs(80 / 120 - 50 / 100)) < 1e-9
 
 
-def test_knn_bruteforce_pandas_null_and_zero_vectors(spark):
-    """NULL embeddings and zero-norm vectors must be skipped, not crash
-    the task or surface as NaN rank-1 neighbors (Spark sorts NaN above
-    every real double)."""
-    import math
-
-    from oblate_spark.operators.similarity import knn_bruteforce_pandas
-
-    rows = [
-        ("a", [1.0, 0.0]),
-        ("b", [0.9, 0.1]),
-        ("zero", [0.0, 0.0]),
-        ("nullv", None),
-    ]
-    corpus = spark.createDataFrame(rows, "id string, vec array<double>")
-    out = knn_bruteforce_pandas(
-        corpus, [("q1", [1.0, 0.0])], id_col="id", vec_col="vec", k=3
-    ).collect()
-    got = [(r["neighbor_id"], r["cosine"]) for r in sorted(out, key=lambda r: r["rank"])]
-    assert [g[0] for g in got] == ["a", "b"]  # zero/null vectors excluded
-    assert all(not math.isnan(g[1]) for g in got)
-
-
 def test_ivf_empty_corpus_returns_empty(spark):
     from oblate_spark.operators.similarity import ivf_assign, knn_ivf
 
@@ -368,11 +345,11 @@ def test_ivf_empty_corpus_returns_empty(spark):
 def test_zero_norm_vectors_never_pair_and_never_fail(spark):
     """A zero-norm vector has a NULL cosine (no ANSI DIVIDE_BY_ZERO):
     IVF assignment, the candidate-pair join, the exhaustive kernel and
-    the three kNN searches all succeed, and no output pair holds it. A
+    the two kNN searches all succeed, and no output pair holds it. A
     zero query gets no neighbours."""
     from oblate_spark.operators.dedup import embedding_near_duplicates
     from oblate_spark.operators.similarity import (
-        cosine_expr, ivf_assign, knn_bruteforce, knn_bruteforce_pandas, knn_ivf,
+        cosine_expr, ivf_assign, knn_bruteforce, knn_ivf,
     )
 
     vecs = spark.range(50).select(
@@ -394,11 +371,9 @@ def test_zero_norm_vectors_never_pair_and_never_fail(spark):
     knn_kw = dict(id_col="id", vec_col="vec", k=3)
     brute = knn_bruteforce(vecs, queries, **knn_kw).collect()
     ivf = knn_ivf(vecs, queries, n_centroids=4, nprobe=4, **knn_kw).collect()
-    local = [(r.id, r.vec) for r in queries.collect()]
-    numpy_brute = knn_bruteforce_pandas(vecs, local, **knn_kw).collect()  # string ids
-    for res in (brute, ivf, numpy_brute):
-        assert {str(r.query_id) for r in res} == {"1", "2"}
-        assert all(str(r.neighbor_id) != "0" and r.cosine is not None for r in res)
+    for res in (brute, ivf):
+        assert {r.query_id for r in res} == {1, 2}
+        assert all(r.neighbor_id != 0 and r.cosine is not None for r in res)
         assert sorted(r.rank for r in res) == [1, 1, 2, 2, 3, 3]
 
 

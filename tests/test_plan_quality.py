@@ -212,10 +212,10 @@ def test_knn_ivf_broadcasts_probes_and_matches_bruteforce(spark):
     assert got == want
 
 
-def test_fingerprint_topk_is_bounded_before_collect(spark):
-    """The bottom-k fingerprint must pre-rank (WindowGroupLimit pushes
-    the k-limit map-side) instead of collect_set-ing every distinct
-    shingle hash per doc — unbounded agg buffers for huge docs."""
+def test_fingerprint_is_one_projection(spark):
+    """The bottom-k fingerprint hashes, sorts and cuts each document's
+    shingle array inside its own row: no explode-and-regroup (no
+    Window, no aggregate, no Exchange), so nothing is shuffled."""
     from oblate_spark.operators.text import fingerprint
 
     df = spark.range(0, 50).selectExpr(
@@ -224,8 +224,9 @@ def test_fingerprint_topk_is_bounded_before_collect(spark):
     )
     fp = fingerprint(df, id_col="doc_id", text_col="text", k=4)
     plan = plan_of(fp)
-    assert "WindowGroupLimit" in plan, plan[:2000]
-    assert "collect_set" not in plan, plan[:2000]
+    for node in ("Window", "Aggregate", "Exchange", "Generate"):
+        assert node not in plan, (node, plan[:2000])
+    assert "sort_array" in plan, plan[:2000]
 
 
 def test_bucketed_join_has_no_exchange(spark):
@@ -1022,6 +1023,25 @@ def test_candidate_self_joins_reuse_one_exchange(spark, near_dup_inputs):
         assert df.collect(), name
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ReusedExchange" in plan and "ExistingRDD" not in plan, (name, plan)
+
+
+def test_lsh_bands_are_a_projection_of_one_minhash_row(spark, near_dup_inputs):
+    """Each join side aggregates once, the H minhash ``min``s per doc;
+    its bands are slices of that one row, so no band regroup
+    (``collect_list`` / ObjectHashAggregate) and no ``stack`` of the
+    minhashes into rows."""
+    from oblate_spark.operators.dedup import lsh_candidate_pairs
+
+    docs, _ = near_dup_inputs
+    df = lsh_candidate_pairs(docs, id_col="doc_id", text_col="text")
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for bad in ("collect_list", "ObjectHashAggregate", "stack("):
+        assert bad not in plan, (bad, plan)
+    logical = df._jdf.queryExecution().optimizedPlan().toString()
+    below_join = logical.split("Join Inner", 1)[1].splitlines()
+    aggs = [line for line in below_join if "Aggregate [" in line]
+    assert len(aggs) == 2 and all("min(md5" in line for line in aggs), logical
 
 
 def test_candidate_pair_cosine_folds_each_norm_once(spark, near_dup_inputs):

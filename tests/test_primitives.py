@@ -205,3 +205,42 @@ def test_staged_string_escapes_are_decoded(spark):
     got = [(r["row_id"], r["error_code"], r["value_repr"]) for r in res.violations.collect()]
     assert got == [("1", "validate.length", "'a\"b'")]
     assert res.get_values_for(["0", "1"], "s") == {"0": "é", "1": 'a"b'}
+
+
+class BigStrict(Schema):
+    i = fields.Integer(validators=[V.Range(0, 100)])
+
+
+class BigLax(Schema):
+    i = fields.Integer(strict=False, validators=[V.Range(0, 100)])
+
+
+def _violations(result):
+    return sorted((r["row_id"], r["error_code"], r["message"]) for r in result.violations.collect())
+
+
+def test_staged_integer_past_64_bits_is_coercion_failure(spark):
+    """A strict integer token past 64 bits is ``integer.coercion_failed``
+    (not a CAST_INVALID_INPUT job failure), and its Range check is
+    suppressed; in-range and out-of-range bigints behave as before."""
+    df = staged_df(spark, {"i": [12345678901234567890123, 7, 500, 2**63 - 1]})
+    got = _violations(BigStrict.validate(df, mode="staged"))
+    assert [g[:2] for g in got] == [
+        ("0", "integer.coercion_failed"),
+        ("2", "validate.range"),
+        ("3", "validate.range"),
+    ]
+    assert got[0][2] == "Failed to coerce 12345678901234567890123 to integer"
+
+
+def test_staged_lax_integer_float_overflow_is_coercion_failure(spark):
+    """Non-strict: a float token whose integer part overflows a bigint
+    (``1e30``) and an integer token past 64 bits are coercion failures,
+    not a CAST_OVERFLOW job failure; ``2.5`` still truncates to 2."""
+    df = staged_df(spark, {"i": [1e30, -12345678901234567890123, 2.5]})
+    res = BigLax.validate(df, mode="staged")
+    assert _violations(res) == [
+        ("0", "integer.coercion_failed", "Failed to coerce 1e+30 to integer"),
+        ("1", "integer.coercion_failed", "Failed to coerce -12345678901234567890123 to integer"),
+    ]
+    assert res.get_values_for(["2"], "i") == {"2": 2}
