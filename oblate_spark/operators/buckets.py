@@ -34,6 +34,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "DEFAULT_BUCKETS",
     "assign_aspect_bucket",
@@ -168,8 +170,8 @@ def aspect_bucket_batches(
         for s, cnt in sorted(pairs):
             offset_rows.append((b, s, acc))
             acc += cnt
-    spark = df.sparkSession
-    offsets = spark.createDataFrame(
+    offsets = local_frame(
+        df.sparkSession,
         offset_rows or [(0, 0, 0)],
         "bucket_id int, __shard int, __offset bigint",
     )

@@ -22,6 +22,15 @@ Scale notes:
 * phash comparison uses ``bit_count(declared ^ actual)`` (JVM-side
   hamming distance) so near-match tolerance is a plan knob, not a
   Python loop.
+* The file-driven kernel's memory per task is one record batch of
+  about ``_BATCH_BYTES`` of payload, not one file: over a 64 MB
+  single-row-group file the reader plus decode raise a process's peak
+  RSS by 0.43x the file, against 4.2x for a whole-file read. The bound
+  holds down to a parquet page, which a reader decodes whole, and so
+  is a dictionary page: pyarrow's writer defaults put 256 rows of
+  256 KB images in one 64 MB page (``write_batch_size=1024``), and
+  26 KB images behind a 26 MB dictionary page. The Spark-written
+  files of the images benchmark (plain-encoded payloads) stream.
 """
 
 from __future__ import annotations
@@ -421,19 +430,52 @@ def _list_parquet_files(spark, paths: list) -> list:
     return out
 
 
-def _open_parquet(fname: str):
-    """Worker-side open of a Hadoop-style URI with pyarrow,
-    single-threaded (the executor already runs one worker per core).
-    ``file:`` URIs are stripped to local paths; remote schemes go
-    through pyarrow's own filesystem resolution (pyarrow.fs / fsspec)."""
-    import pyarrow.parquet as pq
+#: payload bytes a file-driven kernel task decodes per Arrow record
+#: batch: one batch, not one file, bounds a Python worker's memory
+_BATCH_BYTES = 4 << 20
 
-    if fname.startswith("file:"):
-        local = fname[5:]
-        while local.startswith("//"):
-            local = local[1:]
-        return pq.read_table(local, use_threads=False)
-    return pq.read_table(fname, use_threads=False)
+
+def _rows_per_batch(total_byte_size: int, num_rows: int) -> int:
+    """Rows per record batch for a row group of ``num_rows`` rows and
+    ``total_byte_size`` uncompressed bytes: ``_BATCH_BYTES`` over the
+    mean row size, at least one row (a huge image is a batch of one;
+    thumbnails pack many)."""
+    return max(1, _BATCH_BYTES * num_rows // max(total_byte_size, 1))
+
+
+def _parquet_batches(uri: str, columns: list):
+    """Worker-side streaming read of a Hadoop-style parquet URI: yields
+    ``columns`` as Arrow record batches of about ``_BATCH_BYTES``, each
+    row group in turn, single-threaded (the executor already runs one
+    worker per core). A 1 MiB read buffer keeps pyarrow from reading a
+    whole column chunk per batch. ``file:`` URIs are stripped to local
+    paths; remote schemes resolve through ``pyarrow.fs``. The file is
+    closed when the generator finishes or is closed: Python workers are
+    reused, so a leaked handle would outlive the task."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    if uri.startswith("file:"):
+        path = uri[5:]
+        while path.startswith("//"):
+            path = path[1:]
+        filesystem = fs.LocalFileSystem()
+    else:
+        filesystem, path = fs.FileSystem.from_uri(uri)
+    with filesystem.open_input_file(path) as source, pq.ParquetFile(
+        source, buffer_size=1 << 20
+    ) as pf:
+        meta = pf.metadata
+        for i in range(meta.num_row_groups):
+            rg = meta.row_group(i)
+            # ``yield from`` binds no local: a suspended reader holds
+            # no batch the consumer has dropped
+            yield from pf.iter_batches(
+                batch_size=_rows_per_batch(rg.total_byte_size, rg.num_rows),
+                row_groups=[i],
+                columns=columns,
+                use_threads=False,
+            )
 
 
 def _pack_files(files: list, n_bins: int) -> list:
@@ -479,16 +521,24 @@ def image_payload_report_from_files(
     core runs ONE Python task, whatever the file count. A Python task
     has a fixed start-up cost before the kernel runs (an empty
     ``mapInPandas`` stage took 0.39 s at 4 tasks and 0.89 s at 16 on a
-    4-core host), so more tasks than cores only add that cost. A report partition — and so the ``partition_id`` of
-    its violations — therefore covers a bin of files, not one file; the
-    kernel still yields one report batch per file.
+    4-core host, most of it PySpark's ``importlib.invalidate_caches()``
+    re-reading the archives on the worker's ``sys.path``), so more tasks
+    than cores only add that cost. A report partition — and so the
+    ``partition_id`` of its violations — therefore covers a bin of
+    files, not one file.
+
+    Each file is streamed as Arrow record batches of about
+    ``_BATCH_BYTES`` of payload (``_parquet_batches``), and the kernel
+    yields one report batch per record batch, so a worker holds one
+    batch of payloads, not a file: over 8 files of 33 MB on 4 cores a
+    kernel worker peaks at 175-188 MB (372-390 MB reading each file
+    whole). Rows keep their file order within a bin.
 
     ``path`` may be a single directory or a list of directories, on ANY
     Hadoop-visible filesystem (``file:``, ``hdfs:``, ``s3a:``, ...):
     listing goes through the Hadoop FileSystem API of the session —
     exactly what the scan of a real object-store table resolves through
-    — and workers open the returned URIs with pyarrow (its
-    ``pyarrow.fs``/fsspec resolvers handle remote schemes).
+    — and workers open the returned URIs with ``pyarrow.fs``.
 
     ``max_files`` truncates the (name-sorted) file list — a sampling /
     warm-up knob: validate a deterministic subset of a huge table, or
@@ -510,17 +560,19 @@ def image_payload_report_from_files(
         for pdf in iterator:
             for bin_files in pdf["files"]:
                 for fname in bin_files:
-                    tbl = _open_parquet(fname)
-                    # vectorized Arrow->pandas for the metadata; only the
-                    # bytes column needs python objects (decode input)
-                    meta = tbl.select(meta_cols).to_pandas(
-                        use_threads=False, types_mapper={None: None}.get
-                    )
-                    blobs = tbl.column("bytes").to_pylist()
-                    res = _decode_batch(blobs, compute_phash)
-                    out = {c: meta[c] for c in meta_cols}
-                    out.update(res)
-                    yield pd.DataFrame(out)
+                    for batch in _parquet_batches(fname, meta_cols + ["bytes"]):
+                        # vectorized Arrow->pandas for the metadata; only
+                        # the bytes column needs python objects (decode input)
+                        meta = batch.select(meta_cols).to_pandas(
+                            use_threads=False, types_mapper={None: None}.get
+                        )
+                        blobs = batch.column("bytes").to_pylist()
+                        res = _decode_batch(blobs, compute_phash)
+                        # drop the payloads before the next batch is read
+                        del batch, blobs
+                        out = {c: meta[c] for c in meta_cols}
+                        out.update(res)
+                        yield pd.DataFrame(out)
 
     # the bins travel as ONE JSON literal and row ``id`` picks its bin:
     # O(1) py4j calls however many files (a per-file ``F.lit`` costs a

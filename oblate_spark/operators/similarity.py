@@ -13,10 +13,9 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..session import local_frame
 from .binding import let
 
 __all__ = [
@@ -188,13 +187,7 @@ def ivf_assign(
     # centroids) re-collecting it gets these exact rows for free instead
     # of re-running the TakeOrdered corpus scan — which would also
     # silently couple correctness to the derivation being deterministic.
-    # The rows go over Arrow: createDataFrame(list) would build a Python
-    # RDD scan, a Python job on every collect.
-    cents = corpus.sparkSession.createDataFrame(
-        pa.Table.from_pylist(
-            [r.asDict(recursive=True) for r in cent_rows], schema=to_arrow_schema(cents.schema)
-        )
-    )
+    cents = local_frame(corpus.sparkSession, cent_rows, cents.schema)
     vec = F.col(vec_col)
     if not cent_rows:
         # empty corpus: zero assignments, not an AnalysisException from

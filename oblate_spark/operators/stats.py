@@ -25,6 +25,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
 from .drift import ACCURACY
 
 __all__ = [
@@ -557,9 +558,7 @@ def suggest_constraints(
             out.append(
                 (c, "range", f"{c} BETWEEN {p[f'{c}__min']} AND {p[f'{c}__max']}")
             )
-    return df.sparkSession.createDataFrame(
-        out, "column string, code string, expression string"
-    )
+    return local_frame(df.sparkSession, out, "column string, code string, expression string")
 
 
 def uniqueness_metrics(df: DataFrame, cols: Sequence[str]) -> DataFrame:

@@ -13,7 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["default_cores", "default_heap", "get_spark", "session_conf", "stop_spark"]
+__all__ = [
+    "default_cores", "default_heap", "get_spark", "local_frame", "session_conf", "stop_spark",
+]
 
 
 def get_spark(
@@ -45,6 +47,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """Rows the driver already holds (tuples or ``Row``s) as a
+    ``LocalRelation``, through Arrow; ``schema`` is a ``StructType`` or
+    a DDL string. ``spark.createDataFrame(list)`` would plan a Python
+    RDD scan instead, and every action on it would run a Python job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def session_conf(

@@ -17,8 +17,10 @@ from __future__ import annotations
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .engine import ValidationResult, validate
+from .session import local_frame
 from .sources.tableio import SnapshotTable
 
 __all__ = ["FrozenError", "UpdateRejected", "update", "merge_upsert", "set_field"]
@@ -172,11 +174,12 @@ def set_field(
     if not assignments:
         raise ValueError("assignments must not be empty")
     cur = table.read()
-    dtypes = dict(cur.dtypes)
-    if key not in dtypes or field not in dtypes:
-        raise RuntimeError(f"Invalid field name {field if key in dtypes else key!r}")
-    changes = table.spark.createDataFrame(
-        [(k, v) for k, v in assignments.items()],
-        f"`{key}` {dtypes[key]}, `{field}` {dtypes[field]}",
+    names = cur.columns
+    if key not in names or field not in names:
+        raise RuntimeError(f"Invalid field name {field if key in names else key!r}")
+    changes = local_frame(
+        table.spark,
+        assignments.items(),
+        StructType([StructField(c, cur.schema[c].dataType) for c in (key, field)]),
     )
     return update(table, changes, schema_cls, key=key, mode=mode, updated_columns=[field])

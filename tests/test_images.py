@@ -247,6 +247,124 @@ def test_file_driven_kernel_max_files_subset(spark, images_df, tmp_path):
     assert 0 < expect_rows < images_df.count()
 
 
+def test_file_driven_kernel_streams_record_batches(spark, tmp_path):
+    """Each file of a bin is read as several record batches of about
+    ``_BATCH_BYTES`` of payload, and the report still equals the
+    DataFrame-driven kernel's row for row, NULL and undecodable payloads
+    included, with one partition per bin."""
+    from collections import Counter
+
+    from oblate_spark.operators.images import (
+        _list_parquet_files,
+        _parquet_batches,
+        image_payload_report_from_files,
+    )
+
+    odd = spark.createDataFrame(
+        [("null_payload", None, 4, 4, "bmp", "cap", 0),
+         ("garbage", b"not an image", 4, 4, "png", "cap", 1)],
+        fixtures.IMAGES_SCHEMA,
+    )
+    # ~26 KB payloads: 2,500 rows make five files of ~13 MB, three to
+    # four batches each
+    src = fixtures.build_images_df(spark, 2500, partitions=4, px=(64, 128)).unionByName(odd)
+    d = str(tmp_path / "streamed")
+    src.repartition(5).write.parquet(d)
+    files = _list_parquet_files(spark, [d])
+    assert len(files) == 5
+    for uri, _size in files:
+        assert len(list(_parquet_batches(uri, ["bytes"]))) >= 3, uri
+
+    rep = image_payload_report_from_files(spark, d)
+    base = image_payload_report(spark.read.parquet(d))
+    rows = Counter(rep.collect())
+    assert rows == Counter(base.collect())
+    assert sum(rows.values()) == 2502
+    errs = {r["image_id"]: r["decode_err"] for r in rows if r["image_id"] in ("null_payload", "garbage")}
+    assert errs["null_payload"] == "payload is NULL" and errs["garbage"]
+    cores = spark.sparkContext.defaultParallelism
+    assert rep.rdd.getNumPartitions() == min(len(files), cores)
+
+
+_READ_PEAK_PROBE = """
+import sys
+import pyarrow.parquet as pq
+from oblate_spark.operators.images import _decode_batch, _parquet_batches
+
+def peak_rss():
+    # VmHWM, not ru_maxrss: an exec'd child's ru_maxrss starts at its
+    # parent's high-water mark, which a long test session can exceed
+    with open("/proc/self/status") as f:
+        return next(int(l.split()[1]) * 1024 for l in f if l.startswith("VmHWM:"))
+
+def whole_file(uri, columns):
+    yield from pq.read_table(uri[len("file:"):], columns=columns).to_batches()
+
+read = _parquet_batches if sys.argv[1] == "stream" else whole_file
+_decode_batch([None, b"x"], True)  # imports the codecs before the baseline
+before = peak_rss()
+for batch in read("file:" + sys.argv[2], ["image_id", "bytes"]):
+    blobs = batch.column("bytes").to_pylist()
+    _decode_batch(blobs, True)
+    del batch, blobs
+print(peak_rss() - before)
+"""
+
+
+def test_kernel_reader_memory_is_one_batch_not_one_file(tmp_path):
+    """The file-driven kernel's reader plus decode over one
+    single-row-group file of ~64 MB raises the worker's peak RSS by
+    less than half the file; reading the file whole raises it by more
+    than the file. Each probe runs in a fresh interpreter and reads
+    its own high-water mark (Linux ``VmHWM``)."""
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    blobs = [
+        codecs.encode_image(rng.integers(0, 256, (256, 340, 3), dtype=np.uint8), "bmp")
+        for _ in range(256)
+    ]
+    path = str(tmp_path / "big.parquet")
+    # ~1 MiB pages, as Spark writes them: a page is the smallest unit
+    # a parquet reader decodes
+    pq.write_table(
+        pa.table({"image_id": [str(i) for i in range(256)], "bytes": blobs}),
+        path, row_group_size=len(blobs), use_dictionary=False, compression="none",
+        write_batch_size=4,
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    size = os.path.getsize(path)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def peak_increase(mode):
+        out = subprocess.run(
+            [sys.executable, "-c", _READ_PEAK_PROBE, mode, path],
+            capture_output=True, text=True, check=True,
+            env={**os.environ, "PYTHONPATH": repo},
+        )
+        return int(out.stdout.split()[-1])
+
+    assert peak_increase("stream") < size / 2
+    assert peak_increase("whole") > size
+
+
+def test_rows_per_batch_by_bytes():
+    """Rows per record batch come from the row group's mean row size:
+    an oversized row is a batch of one, small rows pack many."""
+    from oblate_spark.operators.images import _BATCH_BYTES, _rows_per_batch
+
+    assert _rows_per_batch(3 * 10 * _BATCH_BYTES, 3) == 1
+    assert _rows_per_batch(_BATCH_BYTES + 1, 1) == 1
+    assert _rows_per_batch(1000 * 4096, 1000) == _BATCH_BYTES // 4096
+    assert _rows_per_batch(100 * 26_000, 100) == _BATCH_BYTES // 26_000
+    assert _rows_per_batch(0, 0) == 1
+
+
 def test_pixel_fidelity_statuses(spark):
     """Hand-built pairs hit every status arm: bit-exact re-encode
     passes, small noise passes the 40dB gate, heavy noise fails it,

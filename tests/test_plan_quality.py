@@ -1368,3 +1368,45 @@ def test_driver_scalar_results_are_jvm_plans(spark, sf001_dir, name):
     df = __spark_entry__.queries()[name](spark, sf001_dir)
     assert df.collect()
     assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_operator_driver_rows_plan_as_local_relation(spark, tmp_path, monkeypatch):
+    """Rows an operator builds on the driver (suggested constraints,
+    aspect-bucket offsets, a ``set_field`` change-set) plan as a
+    ``LocalRelation`` over Arrow, not a Python RDD scan (``LogicalRDD``)
+    whose every action runs a Python job."""
+    import oblate_spark.update as update_mod
+    from oblate_spark.operators.buckets import aspect_bucket_batches
+    from oblate_spark.operators.stats import suggest_constraints
+    from oblate_spark.sources.tableio import SnapshotTable
+
+    class Users(Schema):
+        id = fields.Integer()
+        score = fields.Integer(validators=[V.Range(0, 100)])
+
+    table = SnapshotTable(spark, str(tmp_path / "users"))
+    table.write(spark.range(3).select("id", (F.col("id") * 10).alias("score")), operation="append")
+    changes = []
+    monkeypatch.setattr(update_mod, "update", lambda _t, ch, *a, **k: changes.append(ch) or 0)
+    update_mod.set_field(table, Users, key="id", field="score", assignments={1: 95, 2: 10})
+
+    frames = {
+        "suggest_constraints": suggest_constraints(
+            spark.range(20).select((F.col("id") % 3).alias("v")), max_value_set=5
+        ),
+        "aspect_bucket_batches": aspect_bucket_batches(
+            spark.range(50).select(
+                F.col("id").alias("image_id"),
+                (F.col("id") % 7 + 100).cast("int").alias("w"),
+                (F.col("id") % 5 + 100).cast("int").alias("h"),
+            ),
+            id_col="image_id", w_col="w", h_col="h", batch_size=8,
+        ),
+        "set_field": changes[0],
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan, (name, plan)
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, (name, plan)
+    assert sorted(map(tuple, changes[0].collect())) == [(1, 95), (2, 10)]
+    assert changes[0].dtypes == [("id", "bigint"), ("score", "bigint")]
